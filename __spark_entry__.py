@@ -70,11 +70,6 @@ def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def _register(spark: SparkSession, sf_dir: str, *names: str) -> None:
-    for n in names:
-        _read(spark, sf_dir, n).createOrReplaceTempView(n)
-
-
 def _transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     from entity_resolver_spark.sources.transcripts import transcripts_from_events
 
@@ -184,27 +179,11 @@ def q_lev_similarity(spark, sf_dir):
     the native C block kernel (common prefix/suffix stripped, then DP
     over the differing core) — the former plan paid ~1.9us/pair of JVM
     levenshtein, and the intermediate mapInArrow variant paid ~130s of
-    JVM->Python serialization for the joined pair table. The
-    exp()/round() floats stay in Spark SQL, so the similarity values
-    are produced by the exact same JVM expressions as before."""
+    JVM->Python serialization for the joined pair table."""
     from pyspark.sql import types as T
 
     from entity_resolver_spark.functions import ckernels
 
-    if not ckernels.available():  # pragma: no cover - cc exists in CI/bench
-        from entity_resolver_spark.functions.similarity import lev_sim_expr
-
-        c = _read(spark, sf_dir, "customer")
-        a = c.select(F.col("c_custkey").alias("ka"), F.col("c_name").alias("na"),
-                     F.col("c_nationkey").alias("nk"))
-        b = c.select(F.col("c_custkey").alias("kb"), F.col("c_name").alias("nb"),
-                     F.col("c_nationkey").alias("nk"))
-        return (
-            a.join(F.broadcast(b), "nk")
-            .where(F.col("ka") < F.col("kb"))
-            .select("ka", "kb",
-                    F.round(lev_sim_expr(F.col("na"), F.col("nb")), 6).alias("lev_sim"))
-        )
     par = spark.sparkContext.defaultParallelism
     n_slices = max(2, par)
     repl, c = _same_nation_pair_input(spark, sf_dir, n_slices)
@@ -233,30 +212,13 @@ def q_jaro_winkler(spark, sf_dir):
     """Jaro-Winkler over same-nation customer pairs (r6: C block
     kernel generates + scores the pairs) — the DuckDB builtin
     jaro_winkler_similarity is the oracle."""
-    c = _read(spark, sf_dir, "customer")
-    a = c.select(F.col("c_custkey").alias("ka"), F.col("c_name").alias("na"),
-                 F.col("c_nationkey").alias("nk"))
-    b = c.select(F.col("c_custkey").alias("kb"), F.col("c_name").alias("nb"),
-                 F.col("c_nationkey").alias("nk"))
     from pyspark.sql import types as T
 
     from entity_resolver_spark.functions import ckernels
 
-    if not ckernels.available():  # pragma: no cover - cc exists in CI/bench
-        from entity_resolver_spark.functions.similarity import jw_expr
-
-        # broadcast rationale as in the fallback of q_lev_similarity
-        return (
-            a.join(F.broadcast(b), "nk")
-            .where(F.col("ka") < F.col("kb"))
-            .select("ka", "kb", F.round(jw_expr(F.col("na"), F.col("nb")), 4).alias("jw"))
-        )
-    # r6: pairs generated + scored inside the C block kernel (same
-    # doubles as the former NumPy kernel — identical operation order);
-    # see _same_nation_pair_input for why the join was removed.
     par = spark.sparkContext.defaultParallelism
     n_slices = max(2, par)
-    repl, _ = _same_nation_pair_input(spark, sf_dir, n_slices)
+    repl, c = _same_nation_pair_input(spark, sf_dir, n_slices)
     key_t = c.schema["c_custkey"].dataType
     # 'jw4' = F.round(jw, 4) computed batch-side with spark_round
     # (bit-identical; the JVM BigDecimal round cost ~12s/450M rows)
@@ -636,7 +598,7 @@ def q_resolve_entities(spark, sf_dir):
 
 def q_minhash_dedup(spark, sf_dir):
     """MinHash-LSH near-dup pairs in PORTABLE-hash mode (affine family
-    over poly_hash_expr — see minhash_signature_portable): the DuckDB
+    over poly_hash_expr — see dedup.minhash_lsh_pairs): the DuckDB
     oracle replicates the SIGNATURES and the BANDING, so candidate
     generation is identical in both engines and the verified output
     value-checks end-to-end. Production default stays xxhash64."""

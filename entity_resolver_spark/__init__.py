@@ -8,8 +8,9 @@ DataFrame pipeline over multi-turn conversation/agent transcripts:
       -> collapse   (window-ordered turn concatenation)
       -> normalize  (NFKC / lower / regex pipeline)
       -> block      (deterministic token keys + MinHash/LSH bands)
-      -> pair-score (Arrow-batched NumPy: Jaro-Winkler, Levenshtein,
-                     token-set cosine over hashed TF-IDF)
+      -> pair-score (native C kernels: Jaro-Winkler, Levenshtein;
+                     Arrow-batched NumPy: token-set cosine over hashed
+                     TF-IDF)
       -> cluster    (large-star/small-star connected components)
       -> validate   (metadata conflict splits, invariant gates)
       -> canonical  (per-cluster canonical record + chain numbering)

@@ -111,9 +111,9 @@ class ScoringConfig(BaseModel):
     w_levenshtein: float = 0.30
     w_cosine: float = 0.50
     edge_threshold: float = 0.55          # pairs scoring >= this become edges
-    # cap built-in levenshtein() cost: the DP is O(cap^2) per pair and
-    # dominated the scoring stage at 256 (measured ~31s vs ~8s at 128 on
-    # 380k pairs); normalized transcript prefixes discriminate as well
+    # cap Levenshtein cost: the DP is O(cap^2) per pair and (with the
+    # JVM builtin) dominated the scoring stage at 256 (measured ~31s vs
+    # ~8s at 128 on 380k pairs); normalized transcript prefixes discriminate as well
     # at 128 because perturbations spread through the whole doc
     lev_prefix_chars: int = 128
     jw_prefix_chars: int = 64             # JW is a prefix-heavy measure anyway

@@ -3,37 +3,37 @@
 
 The Jaro-Winkler and Levenshtein pair kernels are the two hottest
 per-row computations in the query surface (450M same-nation customer
-pairs at sf1.0). The previous implementations were a NumPy
-lockstep-vectorized JW (O(L*(2W+1)) full-batch vector ops per pair
-position — ~780G elementwise ops for the sf1.0 pair table) and the
-JVM `levenshtein` builtin (~1.9us/pair for 18-char names: a full
-O(n*m) DP with no common-affix stripping). Both are replaced by a
-small C library compiled once per host with the system compiler and
-called through ctypes on raw Arrow buffers via mapInArrow — zero
-per-row Python, zero per-row JVM<->Python conversions beyond the one
-Arrow columnar transfer.
+pairs at sf1.0). This small C library, compiled once per host with the
+system compiler and called through ctypes on raw Arrow buffers, is the
+only implementation of either metric the engine runs: zero per-row
+Python, zero per-row JVM<->Python conversions beyond the one Arrow
+columnar transfer. (similarity.jaro_winkler_py is the pure-Python
+reference the tests compare against.)
 
 Numerical contract (the DuckDB oracles value-check both queries):
 
   * Levenshtein: exact integer edit distance over codepoints, capped
     at `cap` codepoints per side (== length(substring(s, 1, cap))).
     Common prefix/suffix stripping is a distance-preserving classic —
-    the DP runs only over the differing core. The exp()/round() of
-    the similarity stays in Spark SQL, so those floats are produced
-    by the same JVM code paths as before (bit-identical results).
-  * Jaro-Winkler: same operation order as the former NumPy kernel
+    the DP runs only over the differing core. lev_sim_expr keeps the
+    similarity's exp() in Spark SQL; block_pairs_map('lev_sim6')
+    computes it batch-side (see its docstring).
+  * Jaro-Winkler: same operation order as jaro_winkler_py
     (m/la + m/lb + (m-t)/m)/3, boost for jaro > 0.7 — IEEE doubles on
-    exact small integers, so results are bit-identical to the old
-    kernel (which the oracle verified). The greedy match loop skips
-    the common prefix: within a shared prefix the greedy assignment
-    provably matches i<->i (induction: at step i < p every j < i is
-    already matched, and b[i] == a[i] is unmatched and in-window), so
-    prefix chars contribute p matches and 0 transpositions.
+    exact small integers, so results match the reference and DuckDB's
+    jaro_winkler_similarity. The greedy match loop skips the common
+    prefix: within a shared prefix the greedy assignment provably
+    matches i<->i (induction: at step i < p every j < i is already
+    matched, and b[i] == a[i] is unmatched and in-window), so prefix
+    chars contribute p matches and 0 transpositions.
 
 Compilation: cc -O3 -shared -fPIC into a content-addressed file under
-the user cache dir; concurrent workers race benignly (compile to a
-private temp name, os.rename is atomic). Loading is cached per
-process (guide §4.5: heavyweight init once per worker, not per batch).
+the user cache dir. A C compiler is required on the driver and on
+every executor; get_spark loads the library at session start, so a
+missing `cc` fails there and not inside a task. Concurrent workers
+race benignly (compile to a private temp name, os.rename is atomic).
+Loading is cached per process (guide §4.5: heavyweight init once per
+worker, not per batch).
 """
 
 from __future__ import annotations
@@ -213,7 +213,6 @@ void lev_batch(const unsigned char *da, const int32_t *oa,
 """
 
 _LIB: ctypes.CDLL | None = None
-_LIB_FAILED = False
 
 
 def _so_path() -> str:
@@ -226,7 +225,9 @@ def _so_path() -> str:
 def load_lib() -> ctypes.CDLL:
     """Compile (once per host, content-addressed) and load the kernel
     library. Safe under concurrent workers: each compiles to a private
-    temp file and atomically renames into place."""
+    temp file and atomically renames into place. Raises RuntimeError
+    (with the compiler's stderr) when `cc` is missing or fails — there
+    is no non-native fallback."""
     global _LIB
     if _LIB is not None:
         return _LIB
@@ -239,10 +240,19 @@ def load_lib() -> ctypes.CDLL:
             csrc = f.name
         tmp_so = csrc[:-2] + ".so"
         try:
-            subprocess.run(
-                ["cc", "-O3", "-shared", "-fPIC", "-o", tmp_so, csrc],
-                check=True, capture_output=True,
-            )
+            try:
+                proc = subprocess.run(
+                    ["cc", "-O3", "-shared", "-fPIC", "-o", tmp_so, csrc],
+                    capture_output=True, text=True,
+                )
+                err = proc.stderr if proc.returncode else None
+            except OSError as e:  # no `cc` on PATH
+                err = str(e)
+            if err is not None:
+                raise RuntimeError(
+                    "compiling the string kernels with `cc` failed; a C compiler"
+                    f" is required on the driver and on every executor:\n{err}"
+                )
             os.rename(tmp_so, so)
         finally:
             os.unlink(csrc)
@@ -271,20 +281,6 @@ def load_lib() -> ctypes.CDLL:
     lib.lev_block.restype = ctypes.c_long
     _LIB = lib
     return lib
-
-
-def available() -> bool:
-    """True when the native kernels can be compiled/loaded on this host
-    (callers fall back to the pure-Python/JVM paths otherwise)."""
-    global _LIB_FAILED
-    if _LIB_FAILED:
-        return False
-    try:
-        load_lib()
-        return True
-    except Exception:  # no cc on host, read-only tmp, ...
-        _LIB_FAILED = True
-        return False
 
 
 def _string_buffers(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -455,8 +451,11 @@ def block_pairs_map(
         # matrix stride to the longest observed string is lossless —
         # with cap=256 and 18-char names this cuts decode/copy traffic
         # 14x.
+        # The C kernels keep fixed stack buffers (jw_pair: 64 flags per
+        # side, lev_pair: a 257-entry DP row), so the stride is also
+        # clamped to what each kernel can hold.
         max_bytes = int(np.max(np.diff(offs.astype(np.int64)))) if n else 1
-        eff_cap = max(1, min(cap, max_bytes))
+        eff_cap = max(1, min(cap, max_bytes, 64 if metric in ("jw", "jw4") else 256))
         mat = np.empty((n, eff_cap), dtype=np.uint32)
         lens = np.empty(n, dtype=np.int32)
         lib.decode_block(_ptr(data), _ptr(offs), n, eff_cap, _ptr(mat), _ptr(lens))
@@ -538,32 +537,3 @@ def block_pairs_map(
 
     return fn
 
-
-def jw_map_batches(a_col: str, b_col: str, out_col: str = "jw_raw"):
-    """mapInArrow function factory: pass through every input column and
-    append the raw (unrounded) Jaro-Winkler double of (a_col, b_col)."""
-
-    def fn(batches):
-        for batch in batches:
-            jw = jw_arrow(batch.column(a_col), batch.column(b_col))
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)] + [jw],
-                names=batch.schema.names + [out_col],
-            )
-
-    return fn
-
-
-def lev_map_batches(a_col: str, b_col: str, cap: int = 256):
-    """mapInArrow function factory: pass through every input column and
-    append lev distance + capped codepoint lengths of (a_col, b_col)."""
-
-    def fn(batches):
-        for batch in batches:
-            d, la, lb = lev_arrow(batch.column(a_col), batch.column(b_col), cap)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i) for i in range(batch.num_columns)] + [d, la, lb],
-                names=batch.schema.names + ["lev", "len_a", "len_b"],
-            )
-
-    return fn

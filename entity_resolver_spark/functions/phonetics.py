@@ -13,14 +13,13 @@ knight/night, philip/filip, …) applied per word inside ONE Arrow
 batch UDF; the resulting code array plays the role of the reference's
 phonetic token stream — feed it to hashed_tfidf for a binary phonetic
 vector, or use codes as an extra blocking channel for short name-like
-fields. Spark's built-in `soundex()` is exposed too as the cheap
-JVM-only variant.
+fields.
 """
 
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -177,8 +176,3 @@ def add_phonetic_tokens(
     (V3 — binary TF is exactly what hashed_tfidf computes on a distinct
     token array) or to blocking as an extra channel."""
     return df.withColumn(out_col, make_metaphone_udf(max_words)(F.col(text_col)))
-
-
-def soundex_expr(col: Column) -> Column:
-    """Built-in JVM soundex — the cheap phonetic key variant."""
-    return F.soundex(col)

@@ -4,12 +4,14 @@ Reference kernels live in /root/reference/entity_resolver/utils/
 similarity.py (normalized Levenshtein 128-168, TF-IDF cosine 213-400,
 embedding cosine 522-613). Spark-first split:
 
-  * Levenshtein similarity exp(-2*lev/(len_a+len_b)) — pure SQL via the
-    built-in JVM levenshtein() (whole-stage codegen, no Python at all);
-  * Jaro-Winkler — no Spark builtin; Arrow-batched pandas UDF with a
-    tight per-pair scorer (strings are length-capped upstream). Matches
-    DuckDB's jaro_winkler_similarity (boost threshold 0.7, prefix
-    weight 0.1) so the oracle can cross-check it;
+  * Levenshtein similarity exp(-2*lev/(len_a+len_b)) — the integer
+    distance comes from the native C kernel (functions/ckernels.py)
+    through an Arrow-batched pandas UDF; exp()/division stay in SQL;
+  * Jaro-Winkler — no Spark builtin; the same C library scores each
+    Arrow batch (strings are length-capped upstream). Matches DuckDB's
+    jaro_winkler_similarity (boost threshold 0.7, prefix weight 0.1)
+    so the oracle can cross-check it; jaro_winkler_py is the
+    pure-Python reference the tests compare against;
   * token-set cosine over hashed TF-IDF — sparse vectors built fully
     JVM-side (explode -> idf join -> slot hash -> re-collect, see
     vectorize.py); the pair dot product is an Arrow-batched NumPy UDF.
@@ -25,7 +27,7 @@ from pyspark.sql import types as T
 
 
 # ---------------------------------------------------------------------------
-# K1: normalized Levenshtein similarity — pure SQL
+# K1: normalized Levenshtein similarity
 # ---------------------------------------------------------------------------
 
 def lev_sim_expr(a: Column, b: Column, prefix_chars: int = 256) -> Column:
@@ -33,11 +35,10 @@ def lev_sim_expr(a: Column, b: Column, prefix_chars: int = 256) -> Column:
     utils/similarity.py:128-168). Identical strings -> 1.0; two empty
     strings -> 1.0 (reference returns 1 for zero denominator).
 
-    r6: the integer distance comes from the native C kernel when a
-    compiler exists (lev_expr) — the JVM builtin pays a full unstripped
-    O(n*m) DP, ~30-80us per 128-char window pair, which dominated
-    pair scoring at mega-family shapes. exp()/division unchanged, so
-    the similarity doubles are identical."""
+    The integer distance comes from the native C kernel (lev_expr):
+    the JVM builtin pays a full unstripped O(n*m) DP, ~30-80us per
+    128-char window pair, which dominated pair scoring at mega-family
+    shapes."""
     xa, xb = F.substring(a, 1, prefix_chars), F.substring(b, 1, prefix_chars)
     denom = F.length(xa) + F.length(xb)
     return F.when(denom == 0, F.lit(1.0)).otherwise(
@@ -46,7 +47,7 @@ def lev_sim_expr(a: Column, b: Column, prefix_chars: int = 256) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# Jaro-Winkler — Arrow-batched UDF (standard definition, DuckDB-compatible)
+# Jaro-Winkler — native C kernel (standard definition, DuckDB-compatible)
 # ---------------------------------------------------------------------------
 
 def jaro_winkler_py(s1: str, s2: str) -> float:
@@ -94,121 +95,28 @@ def jaro_winkler_py(s1: str, s2: str) -> float:
     return jaro + prefix * 0.1 * (1.0 - jaro)
 
 
-def jaro_winkler_batch(a: pd.Series, b: pd.Series, max_len: int = 64) -> pd.Series:
-    """Batch-vectorized Jaro-Winkler: the greedy match loop runs over
-    (position i, offset j) with every PAIR advanced simultaneously in
-    NumPy — no per-row Python. Exactly matches jaro_winkler_py /
-    DuckDB's jaro_winkler_similarity on capped inputs.
-
-    Cost: O(L * (2W+1)) vector ops per batch (L=longest string,
-    W=match window), independent of batch size."""
-    n = len(a)
-    out = np.zeros(n, dtype="float64")
-    if n == 0:
-        return pd.Series(out)
-
-    def encode(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-        lens = np.fromiter(
-            (0 if x is None else min(len(x), max_len) for x in s), np.int64, count=n
-        )
-        m = np.zeros((n, max(1, int(lens.max()))), dtype=np.uint32)
-        for r, x in enumerate(s):
-            if x:
-                x = x[:max_len]
-                m[r, : len(x)] = np.frombuffer(x.encode("utf-32-le"), dtype=np.uint32)
-        return m, lens
-
-    am, la = encode(a)
-    bm, lb = encode(b)
-    l1, l2 = am.shape[1], bm.shape[1]
-    valid = (la > 0) & (lb > 0)
-    w = np.maximum(np.maximum(la, lb) // 2 - 1, 0)
-
-    f1 = np.zeros((n, l1), dtype=bool)
-    f2 = np.zeros((n, l2), dtype=bool)
-    matches = np.zeros(n, dtype=np.int64)
-    wmax = int(w.max()) if n else 0
-    for i in range(l1):
-        done = ~(valid & (i < la))  # pairs with no char at i never match here
-        for j in range(max(0, i - wmax), min(l2, i + wmax + 1)):
-            if done.all():
-                break
-            cand = (
-                ~done
-                & (j < lb)
-                & (np.abs(j - i) <= w)
-                & ~f2[:, j]
-                & (am[:, i] == bm[:, j])
-            )
-            if cand.any():
-                f1[cand, i] = True
-                f2[cand, j] = True
-                matches += cand
-                done |= cand
-
-    has = matches > 0
-    if has.any():
-        # transpositions: a-matched chars in i-order vs b-matched chars
-        # in j-order, aligned per pair by construction
-        r1, c1 = np.nonzero(f1)
-        r2, c2 = np.nonzero(f2)
-        mism = am[r1, c1] != bm[r2, c2]
-        t = np.bincount(r1[mism], minlength=n) // 2
-        m = matches.astype("float64")
-        with np.errstate(divide="ignore", invalid="ignore"):
-            jaro = np.where(
-                has, (m / la + m / lb + (m - t) / np.where(m == 0, 1, m)) / 3.0, 0.0
-            )
-        # common prefix (<=4), only where jaro clears the boost threshold
-        pref = np.zeros(n, dtype=np.int64)
-        run = valid.copy()
-        for i in range(min(4, l1, l2)):
-            run = run & (i < la) & (i < lb) & (am[:, i] == bm[:, i])
-            pref += run
-        out = np.where(jaro > 0.7, jaro + pref * 0.1 * (1.0 - jaro), jaro)
-        out = np.where(valid, out, 0.0)
-    return pd.Series(out)
-
-
 @F.pandas_udf(T.DoubleType())
 def jaro_winkler_udf(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover
-    # native C kernel when a compiler exists on the host (r6: ~20x the
-    # NumPy lockstep kernel; bit-identical outputs — same op order on
-    # IEEE doubles, verified in test_similarity); NumPy fallback kept
-    # for compiler-less hosts.
+    """Jaro-Winkler via the native C kernel (same operation order as
+    jaro_winkler_py on IEEE doubles)."""
+    import pyarrow as pa
+
     from entity_resolver_spark.functions import ckernels
 
-    if ckernels.available():
-        import pyarrow as pa
-
-        return ckernels.jw_arrow(
-            pa.Array.from_pandas(a), pa.Array.from_pandas(b)
-        ).to_pandas()
-    return jaro_winkler_batch(a, b)
+    return ckernels.jw_arrow(pa.Array.from_pandas(a), pa.Array.from_pandas(b)).to_pandas()
 
 
 @F.pandas_udf(T.IntegerType())
-def lev_udf(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover
-    """Exact codepoint Levenshtein via the native C kernel (common
-    prefix/suffix stripped before the DP — integer-exact, so callers
-    get the same values as F.levenshtein)."""
+def lev_expr(a: pd.Series, b: pd.Series) -> pd.Series:  # pragma: no cover
+    """Integer Levenshtein distance via the native C kernel: exact over
+    codepoints (common prefix/suffix stripped before the DP, so the
+    values equal F.levenshtein's), capped at 256 codepoints per side."""
     import pyarrow as pa
 
     from entity_resolver_spark.functions import ckernels
 
     d, _, _ = ckernels.lev_arrow(pa.Array.from_pandas(a), pa.Array.from_pandas(b))
     return d.to_pandas()
-
-
-def lev_expr(a: Column, b: Column) -> Column:
-    """Integer Levenshtein distance: the C kernel when a compiler
-    exists (r6 — the JVM builtin pays a full unstripped O(n*m) DP per
-    pair), F.levenshtein otherwise. Values are identical."""
-    from entity_resolver_spark.functions import ckernels
-
-    if ckernels.available():
-        return lev_udf(a, b)
-    return F.levenshtein(a, b)  # pragma: no cover - cc exists in CI/bench
 
 
 def jw_expr(a: Column, b: Column, prefix_chars: int = 64) -> Column:
@@ -364,21 +272,6 @@ _BLOB_COS_SCHEMA = T.StructType(
 @F.pandas_udf(_BLOB_COS_SCHEMA)
 def sparse_cosine_blob_udf(ba: pd.Series, bb: pd.Series) -> pd.DataFrame:  # pragma: no cover
     return sparse_cosine_blob_batch(ba, bb)
-
-
-def sparse_dot_expr(map_a: Column, map_b: Column) -> Column:
-    """Dot product of two sparse vectors carried as map<slot,double> —
-    pure JVM (map_zip_with merges the key sets; missing keys are null).
-    On L2-normalized vectors this IS the cosine. Replaces the Arrow UDF
-    in the pair-scoring hot path: shipping both vectors of every
-    candidate pair to Python costs ~10KB/pair of Arrow traffic, which
-    dominated the stage."""
-    prod = F.map_zip_with(
-        map_a,
-        map_b,
-        lambda _, x, y: F.coalesce(x, F.lit(0.0)) * F.coalesce(y, F.lit(0.0)),
-    )
-    return F.aggregate(F.map_values(prod), F.lit(0.0), lambda acc, v: acc + v)
 
 
 def dense_cosine_expr(a: Column, b: Column) -> Column:

@@ -9,7 +9,7 @@ expressions (no shuffle for signatures, no Python):
 
   C1 det:  bottom-k of xxhash64 over the distinct-token set — a
            deterministic signature robust to turn reordering (P9 analog);
-  C2 lsh:  MinHash signatures (n hashes as array_min over per-token
+  C2 lsh:  MinHash signatures (n hashes as MIN aggregates over per-token
            xxhash64 with per-hash seeds), banded b x r — the classic
            LSH recall channel for near-duplicates;
   C3 rare: the per-record R globally-rarest tokens (2 <= df <= cap) —
@@ -41,44 +41,6 @@ from pyspark.sql import Window as W
 
 from entity_resolver_spark.config import BlockingConfig
 from entity_resolver_spark.lineage import eager_cut
-
-
-def det_key(tokens_col, k: int) -> "F.Column":
-    """Deterministic signature: bottom-k hashed distinct tokens, joined."""
-    hashed = F.array_sort(F.transform(tokens_col, lambda t: F.xxhash64(t)))
-    return F.concat_ws("|", F.transform(F.slice(hashed, 1, k), lambda h: h.cast("string")))
-
-
-def _min_hash_i(tokens_col, i: int) -> "F.Column":
-    # factory closure: a default-arg lambda (lambda t, i=i) would raise
-    # its arity to 2 and PySpark would bind the array INDEX to i
-    return F.array_min(F.transform(tokens_col, lambda t: F.xxhash64(F.lit(i), t)))
-
-
-def minhash_signature(tokens_col, n_hashes: int) -> "F.Column":
-    """MinHash signature as array<bigint>: sig[i] = min over tokens of
-    xxhash64(i, token). Pure column expression — zero shuffle."""
-    return F.array(*[_min_hash_i(tokens_col, i) for i in range(n_hashes)])
-
-
-POLY_MOD = 1_000_000_007  # matches textstats.poly_hash_expr default
-
-
-def minhash_signature_portable(hashes_col, n_hashes: int) -> "F.Column":
-    """Engine-portable MinHash over PRE-HASHED token values (one
-    poly_hash_expr per token, computed once by the caller — not per
-    hash function): sig[i] = min over h of ((2i+3)*h + (5i+7)) % p.
-    The affine family is weaker dispersion than xxhash64 but exactly
-    reproducible in DuckDB SQL, which is what makes minhash_lsh_pairs
-    value-checkable end-to-end (production keeps xxhash64)."""
-
-    def mh(i: int) -> "F.Column":
-        a, b = 2 * i + 3, 5 * i + 7
-        return F.array_min(
-            F.transform(hashes_col, lambda h: F.pmod(h * a + b, F.lit(POLY_MOD)))
-        )
-
-    return F.array(*[mh(i) for i in range(n_hashes)])
 
 
 def band_keys(sig_col, n_hashes: int, n_bands: int) -> "F.Column":
@@ -153,8 +115,8 @@ def blocking_keys(
         )
     )
 
-    # C2 lsh: sig[i] = min over tokens of xxhash64(i, token), banded —
-    # same values as minhash_signature + band_keys, via MIN aggregates.
+    # C2 lsh: sig[i] = min over tokens of xxhash64(i, token), banded
+    # with the same key layout as band_keys, via MIN aggregates.
     n_h, n_b = cfg.minhash_hashes, cfg.lsh_bands
     rows_per_band = n_h // n_b
     mins = ex.groupBy("conv_id").agg(

@@ -50,7 +50,7 @@ def score_confidence(
 
     # change_magnitude = 1 - sim(original normalized text, canonical
     # text) (reference scorer.py:116-119, TF-IDF sim there; normalized
-    # prefix-capped Levenshtein here — pure JVM codegen, no Python).
+    # prefix-capped Levenshtein here, from the native C kernel).
     has_change = "norm_text" in records.columns and "canonical_text" in records.columns
     if has_change:
         from entity_resolver_spark.functions.similarity import lev_expr

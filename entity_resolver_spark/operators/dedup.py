@@ -28,7 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from entity_resolver_spark.operators.blocking import POLY_MOD, band_keys
+from entity_resolver_spark.operators.blocking import band_keys
+
+POLY_MOD = 1_000_000_007  # matches textstats.poly_hash_expr default
 
 
 # ---------------------------------------------------------------------------
@@ -59,31 +61,14 @@ def exact_dup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "doc
 # token shingles
 # ---------------------------------------------------------------------------
 
-def _shingles(text_col, n: int = 3):
-    """Word n-gram shingle array (distinct) from raw text, JVM-side.
-
-    Built by folding zip_with over shifted slices (O(n) per row);
-    element_at-by-index would re-evaluate the split per element."""
-    words = F.split(F.lower(F.regexp_replace(text_col, r"[^a-zA-Z0-9 ]", " ")), r"\s+")
-    words = F.filter(words, lambda t: F.length(t) > 0)
-    grams = words
-    for j in range(1, n):
-        shifted = F.slice(words, j + 1, F.greatest(F.size(words) - j, F.lit(1)))
-        grams = F.filter(
-            F.zip_with(grams, shifted, lambda a, b: F.concat(a, F.lit(" "), b)),
-            lambda x: x.isNotNull(),
-        )
-    return F.array_distinct(
-        F.when(F.size(words) >= n, grams).otherwise(F.array(F.concat_ws(" ", words)))
-    )
-
-
 def _shingle_rows(docs: DataFrame, text_col: str, id_col: str, n: int = 3) -> DataFrame:
-    """DISTINCT (id, s) word-n-gram shingle rows, value-identical to
-    explode(_shingles(...)) but built with posexplode + a lag window
-    (whole-stage codegen) instead of the interpreted zip_with fold —
-    measured 17.6s -> ~5s for the shingling pass at sf1.0 (guide §4.1:
-    higher-order functions evaluate interpreted per element).
+    """DISTINCT (id, s) word-n-gram shingle rows: a doc with at least
+    n words yields its distinct word n-grams, a shorter doc one shingle
+    of all its words. Built with posexplode + a lag window (whole-stage
+    codegen) instead of an interpreted zip_with fold over shifted
+    slices — measured 17.6s -> ~5s for the shingling pass at sf1.0
+    (guide §4.1: higher-order functions evaluate interpreted per
+    element).
 
     Adjacency is over the empty-filtered word sequence: empties are
     dropped AFTER posexplode, and the lag window orders by the original
@@ -108,8 +93,7 @@ def _shingle_rows(docs: DataFrame, text_col: str, id_col: str, n: int = 3) -> Da
         F.concat_ws(" ", *[F.col(f"w{j}") for j in range(n - 1)], F.col("w")).alias("s"),
     )
     # short docs (fewer than n words): one shingle = all words joined —
-    # the original fallback branch; a single interpreted pass over the
-    # small subset is fine
+    # a single interpreted pass over the small subset is fine
     short = docs.select(
         F.col(id_col).alias("id"), _doc_words_expr(F.col(text_col)).alias("wa")
     ).where(F.size("wa") < n).select("id", F.array_join("wa", " ").alias("s"))
@@ -151,10 +135,11 @@ def minhash_lsh_pairs(
     Banding is derived from jaccard_floor (pick_banding) unless given —
     r1 shipped fixed b=8/r=4, which has only ~40% recall at floor 0.5.
 
-    portable=True swaps xxhash64 for the affine-over-poly-hash family
-    (minhash_signature_portable) a DuckDB oracle reproduces exactly —
-    every shingle is poly-hashed ONCE, then each of the n_hashes
-    functions is a cheap affine transform. Production default stays
+    portable=True swaps xxhash64 for an affine family over a poly hash,
+    sig[i] = min over shingles of ((2i+3)*h + (5i+7)) % POLY_MOD with
+    h = poly_hash_expr(shingle), which a DuckDB oracle reproduces
+    exactly — every shingle is poly-hashed ONCE, then each of the
+    n_hashes functions is a cheap affine transform. Production default stays
     xxhash64 (better dispersion, O(len) per shingle).
 
     Shuffle discipline: the band join carries ONLY (band_key, id) — the

@@ -60,11 +60,6 @@ def nfkc_fold_series(s: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(T.StringType())
-def nfkc_fold_udf(s: pd.Series) -> pd.Series:  # pragma: no cover (runs on executors)
-    return nfkc_fold_series(s)
-
-
 def _make_norm_udf(min_length: int, empty_fallback: str):
     """One-pass NFKC + full normalization as a single Arrow UDF.
 

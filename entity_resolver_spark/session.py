@@ -12,6 +12,8 @@ import os
 import pandas as pd
 from pyspark.sql import SparkSession
 
+from entity_resolver_spark.functions import ckernels
+
 # Executor-worker memory tuning. Minor page faults on this host are
 # ~100x normal cost (virtualized lazy memory), so churning large
 # malloc'd buffers is catastrophic: glibc mmaps >128KB allocations and
@@ -39,7 +41,11 @@ def get_spark(
     cores: local parallelism (defaults to $SPARK_GRAFT_CPUS or '*').
     shuffle_partitions: defaults to 2x cores locally — on a real
     cluster this would be sized to total executor cores.
+
+    Compiles/loads the native string kernels first, so a host without
+    a C compiler fails here rather than inside a task.
     """
+    ckernels.load_lib()
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
         master = f"local[{env}]" if env else "local[*]"

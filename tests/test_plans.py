@@ -4,8 +4,8 @@ These pin the plan SHAPES the round-4 perf work established, so a code
 change that silently degrades them fails here instead of only showing up
 as a bench regression:
 
-  * the 25-key similarity pair joins must stay broadcast joins (a shuffle
-    join on nationkey serializes into 25 tasks no matter the cluster);
+  * the same-nation similarity pair queries must generate their pairs
+    inside the C kernel, with no join in the plan;
   * no driver query may plan an unbounded CartesianProduct (broadcast
     nested-loop is allowed — the ANN brute-force is broadcast-bounded by
     contract);
@@ -47,19 +47,12 @@ def test_pair_queries_generate_kernel_side(spark, entry):
     # mapInArrow node and, crucially, no join at all: a join would mean
     # the 450M-row pair table crosses the JVM->Python Arrow boundary
     # again (measured ~130-170s at sf1.0 vs ~10s for kernel-side
-    # generation). On compiler-less hosts the fallback is the r5
-    # broadcast-join plan.
-    from entity_resolver_spark.functions import ckernels
-
+    # generation).
     qs = entry.queries()
     for name in ("lev_similarity", "jaro_winkler"):
         plan = _plan(qs[name](spark, SF_DIR))
-        if ckernels.available():
-            assert "MapInArrow" in plan, f"{name}: C block kernel not in plan"
-            assert "Join" not in plan, f"{name}: unexpected join around the kernel"
-        else:  # pragma: no cover - cc exists in CI/bench
-            assert "BroadcastHashJoin" in plan, f"{name}: pair join lost its broadcast"
-        assert "SortMergeJoin" not in plan, f"{name}: 25-key join fell back to SMJ"
+        assert "MapInArrow" in plan, f"{name}: C block kernel not in plan"
+        assert "Join" not in plan, f"{name}: unexpected join around the kernel"
 
 
 def test_no_query_plans_a_cartesian_product(spark, entry):

@@ -29,6 +29,8 @@ PAIRS = [
     ("unicode café", "unicode cafe"),
     ("DWAYNE", "DUANE"),
     ("x" * 100, "x" * 99 + "y"),
+    ("emoji 😀 grin", "emoji 😃 grin"),  # non-BMP: 4-byte UTF-8
+    ("x" * 250 + "abcdefghij" * 5, "x" * 250 + "jihgfedcba" * 5),  # 300 codepoints
 ]
 
 
@@ -47,17 +49,17 @@ def test_lev_sim_matches_reference_formula(spark):
     rows = df.select("a", "b", lev_sim_expr(F.col("a"), F.col("b")).alias("s")).collect()
     con = duckdb.connect()
     for r in rows:
-        if len(r["a"]) + len(r["b"]) == 0:
+        # lev_sim_expr caps each side at 256 codepoints by default
+        a, b = r["a"][:256], r["b"][:256]
+        if len(a) + len(b) == 0:
             assert r["s"] == 1.0
             continue
         # Spark levenshtein is codepoint-based; DuckDB's is byte-based,
         # so the DuckDB cross-check only applies to ASCII pairs
-        lev = _lev(r["a"], r["b"])
-        if r["a"].isascii() and r["b"].isascii():
-            assert lev == con.execute(
-                "select levenshtein(?, ?)", [r["a"], r["b"]]
-            ).fetchone()[0]
-        expect = math.exp(-2.0 * lev / (len(r["a"]) + len(r["b"])))
+        lev = _lev(a, b)
+        if a.isascii() and b.isascii():
+            assert lev == con.execute("select levenshtein(?, ?)", [a, b]).fetchone()[0]
+        expect = math.exp(-2.0 * lev / (len(a) + len(b)))
         assert abs(r["s"] - expect) < 1e-12
 
 
@@ -163,8 +165,6 @@ def test_block_pairs_kernel_rounded_matches_expr(spark):
 
     from entity_resolver_spark.functions import ckernels
 
-    if not ckernels.available():
-        pytest.skip("no C compiler")
     names = ["alpha beta", "alpha betta", "gamma", "alpha  beta", "x", ""]
     rows = [(0, s, i, n) for i, n in enumerate(names) for s in range(2)]
     batch = pa.RecordBatch.from_arrays(
@@ -204,3 +204,61 @@ def test_block_pairs_kernel_rounded_matches_expr(spark):
     for r in want:
         assert got["jw"][(r["ia"], r["ib"])] == r["jw"]
         assert got["lev_sim"][(r["ia"], r["ib"])] == r["lev_sim"]
+
+
+def _block_pairs(metric, names, cap):
+    import pyarrow as pa
+
+    from entity_resolver_spark.functions import ckernels
+
+    n = len(names)
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([0] * n, pa.int64()),
+            pa.array([0] * n, pa.int32()),
+            pa.array(range(n), pa.int64()),
+            pa.array(names, pa.string()),
+        ],
+        names=["blk", "sl", "id", "nm"],
+    )
+    fn = ckernels.block_pairs_map(metric, "blk", "sl", "id", "nm", 1, cap=cap)
+    out = pa.Table.from_batches(list(fn(iter([batch]))))
+    return sorted(zip(*out.to_pydict().values()))
+
+
+@pytest.mark.parametrize("metric", ["jw", "jw4", "lev", "lev_sim6"])
+def test_block_pairs_long_names_respect_kernel_buffers(metric):
+    """Names longer than the C kernels' fixed buffers (jw_pair: 64
+    codepoints per side, lev_pair: 256) must be clamped, not overflow
+    the stack: a cap above the buffer gives the same output as a cap
+    at it."""
+    import random
+
+    rng = random.Random(7)
+    names = ["".join(rng.choice("abcde") for _ in range(300)) for _ in range(40)]
+    limit = 64 if metric.startswith("jw") else 256
+    want = _block_pairs(metric, names, limit)
+    assert len(want) == 40 * 39 // 2
+    for cap in (256, 1024):
+        assert _block_pairs(metric, names, cap) == want
+
+
+@pytest.mark.parametrize("cc_script", [None, "#!/bin/sh\necho 'fatal: no space left' >&2\nexit 1\n"])
+def test_load_lib_without_compiler_raises(monkeypatch, tmp_path, cc_script):
+    """A missing or failing `cc` is one RuntimeError naming the compiler
+    and carrying its stderr — not a FileNotFoundError."""
+    from entity_resolver_spark.functions import ckernels
+
+    bin_dir = tmp_path / "bin"
+    bin_dir.mkdir()
+    if cc_script is not None:
+        (bin_dir / "cc").write_text(cc_script)
+        (bin_dir / "cc").chmod(0o755)
+    monkeypatch.setenv("PATH", str(bin_dir))
+    monkeypatch.setattr(ckernels, "_so_path", lambda: str(tmp_path / "kernels.so"))
+    monkeypatch.setattr(ckernels, "_LIB", None)  # restored on teardown
+    with pytest.raises(RuntimeError, match="`cc`") as exc:
+        ckernels.load_lib()
+    if cc_script is not None:
+        assert "fatal: no space left" in str(exc.value)
+    assert not (tmp_path / "kernels.so").exists()
