@@ -25,7 +25,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from entity_resolver_spark.lineage import eager_cut
+from entity_resolver_spark.lineage import counted_cut
 
 
 class CheckpointManager:
@@ -56,16 +56,18 @@ class CheckpointManager:
         self,
         name: str,
         compute: Callable[[], DataFrame],
-        extra_metrics: Callable[[DataFrame], dict] | None = None,
+        extra_metrics: Callable[[DataFrame, int], dict] | None = None,
     ) -> DataFrame:
         """Run (or resume) one stage; returns the stage DataFrame.
+        `extra_metrics(df, rows)` receives the stage's row count.
 
         Without a base_dir this degrades to compute() + localCheckpoint
-        (lineage cut only — still required for iterative stages)."""
+        (lineage cut only — still required for iterative stages); the
+        job that fills the checkpoint also counts its rows."""
         t0 = time.time()
         if self.base_dir is None:
-            df = compute().transform(eager_cut)
-            self._record(name, df, t0, resumed=False, extra=extra_metrics)
+            df, rows = counted_cut(compute())
+            self._record(name, df, t0, resumed=False, extra=extra_metrics, rows=rows)
             return df
 
         data_dir, manifest_path = self._paths(name)
@@ -104,7 +106,7 @@ class CheckpointManager:
             "fingerprint": self.run_fingerprint,
         }
         if extra is not None:
-            m.update(extra(df))
+            m.update(extra(df, m["rows"]))
         self.metrics.append(m)
         if self.base_dir:
             with open(os.path.join(self.base_dir, "_metrics.jsonl"), "a") as f:

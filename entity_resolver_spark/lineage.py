@@ -13,18 +13,20 @@ multiplication inside `JoinSelectionHelper.canBroadcastBySize`
 million-digit sizeInBytes values; Thread dump showed Karatsuba /
 Toom-Cook recursion under SizeInBytesOnlyStatsPlanVisitor).
 
-`eager_cut` materializes via localCheckpoint, then rebuilds the
-Dataset from the SAME checkpointed InternalRow RDD through
+`counted_cut` (and `eager_cut`, the same cut without the count)
+checkpoints via localCheckpoint, rebuilds the Dataset from the SAME
+checkpointed InternalRow RDD through
 `internalCreateDataFrame`, which produces a fresh LogicalRDD with NO
 originStats — sizeInBytes falls back to the (finite) session default
 and the compounding chain resets at every cut. No data moves; the
-rebuild is a driver-side plan-node swap.
+rebuild is a driver-side plan-node swap, and one count of the rebuilt
+RDD fills the checkpoint.
 
 The rebuild rides private/classic-only APIs (`DataFrame._jdf`,
 `SparkSession.internalCreateDataFrame`,
 `pyspark.sql.classic.dataframe`). Under Spark Connect — where `_jdf`
 does not exist — or if a future Spark minor renames any of them, we
-DEGRADE to plain `localCheckpoint(eager=True)` with a one-time loud
+DEGRADE to a plain `localCheckpoint` with a one-time loud
 warning instead of crashing every pipeline run at once. The degraded
 mode is correct but re-exposes the stats-compounding pathology on
 deep iterative plans (tests/test_lineage.py pins both behaviors).
@@ -66,19 +68,36 @@ def _try_rebuild(ck: DataFrame) -> DataFrame | None:
 
 
 def eager_cut(df: DataFrame) -> DataFrame:
-    """localCheckpoint(eager) + drop propagated origin statistics.
+    """localCheckpoint + drop propagated origin statistics, materialized
+    now (counted_cut without the count)."""
+    return counted_cut(df)[0]
 
-    Falls back to the plain checkpoint (stats retained) when the
-    private rebuild APIs are unavailable — warns once per process."""
+
+def counted_cut(df: DataFrame) -> tuple[DataFrame, int]:
+    """(materialized stats-free cut of `df`, its row count) from ONE
+    Spark job.
+
+    The checkpoint is lazy and the stats-free rebuild's RDD is counted
+    directly: that count computes (and pins) every checkpoint partition
+    and counts it in the same job — the same one job an eager
+    localCheckpoint runs internally. At flagship sizes the per-job fixed
+    cost, not data volume, sets the resolve's speed, so a "how many
+    rows?" answered here instead of by a later count()/isEmpty() is one
+    job fewer.
+
+    Falls back to the plain checkpoint (stats retained), filled and
+    counted by its count(), when the private rebuild APIs are
+    unavailable — warns once per process."""
     global _REBUILD_AVAILABLE
-    ck = df.localCheckpoint(eager=True)
-    if _REBUILD_AVAILABLE is False:
-        return ck
-    rebuilt = _try_rebuild(ck)
-    if rebuilt is None:
+    ck = df.localCheckpoint(eager=False)
+    if _REBUILD_AVAILABLE is not False:
+        rebuilt = _try_rebuild(ck)
+        if rebuilt is not None:
+            _REBUILD_AVAILABLE = True
+            return rebuilt, int(rebuilt._jdf.queryExecution().toRdd().count())
         _REBUILD_AVAILABLE = False
         warnings.warn(
-            "lineage.eager_cut: private Spark APIs for the stats-free "
+            "lineage.counted_cut: private Spark APIs for the stats-free "
             "rebuild are unavailable (Spark Connect, or internals moved); "
             "falling back to plain localCheckpoint. Catalyst statistics "
             "will COMPOUND through iterative self-joins — deep pipelines "
@@ -87,9 +106,7 @@ def eager_cut(df: DataFrame) -> DataFrame:
             RuntimeWarning,
             stacklevel=2,
         )
-        return ck
-    _REBUILD_AVAILABLE = True
-    return rebuilt
+    return ck, ck.count()
 
 
 def release_checkpoint(df: DataFrame) -> None:
@@ -107,7 +124,7 @@ def release_checkpoint(df: DataFrame) -> None:
     wrongly released generation is unrecoverable, not merely slow.
 
     No-op under Spark Connect / API drift (same guard philosophy as
-    eager_cut's rebuild).
+    counted_cut's rebuild).
 
     `queryExecution().toRdd()` returns a fresh wrapper RDD over the
     LogicalRDD scan — NOT the persisted checkpoint RDD — so unpersisting

@@ -19,14 +19,18 @@ Implementation notes for scale:
     this would be a checkpoint table per iteration (see
     checkpoint.py);
   * convergence = (count, xxhash64-checksum) pair of the edge set
-    unchanged — one lightweight action per round.
+    unchanged — one lightweight action per round;
+  * edge sets of at most `driver_solve_max_edges` (500k) skip the
+    rounds: the cut that dedups the edges also counts them, and below
+    the gate one collect feeds an exact driver union-find — two Spark
+    jobs per call, whatever the graph's diameter.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from entity_resolver_spark.lineage import eager_cut
+from entity_resolver_spark.lineage import counted_cut, eager_cut
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -137,19 +141,23 @@ def connected_components(
     appears in an edge; `component` is the min node id of the component.
     Callers attach singletons with a left join + coalesce(component, id).
 
-    r6: edge sets at or below `driver_solve_max_edges` (known exactly —
-    the convergence fingerprint already counts the materialized set)
-    are solved with an exact driver union-find instead of the star
-    rounds: identical labels, and the ~4-shuffles-plus-action fixed
-    cost per round disappears. The refinement passes call this once
-    per merge pass on candidate sets that are usually tiny.
+    Edge sets at or below `driver_solve_max_edges` (known exactly: the
+    job that checkpoints the deduplicated edge set also counts it,
+    lineage.counted_cut) are solved with an exact driver union-find
+    instead of the star rounds: identical labels, and the
+    ~4-shuffles-plus-action fixed cost per round disappears. The small
+    path therefore costs two Spark jobs — cut-and-count, then the
+    collect. The refinement passes call this once per merge pass on
+    candidate sets that are usually tiny. The convergence fingerprint
+    is computed only on the distributed path.
     """
-    e = edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
-    e = e.transform(eager_cut)
-    prev = _fingerprint(e)
-    if driver_solve_max_edges and prev[0] <= driver_solve_max_edges:
+    e, n_edges = counted_cut(
+        edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
+    )
+    if driver_solve_max_edges and n_edges <= driver_solve_max_edges:
         return _driver_components(e)
 
+    prev = _fingerprint(e)
     for it in range(max_iterations):
         e = _small_star(_large_star(e))
         if checkpoint_every and (it + 1) % checkpoint_every == 0:

@@ -19,16 +19,47 @@ from pyspark.sql import functions as F
 from entity_resolver_spark.config import ConfidenceConfig
 
 
+# exact accumulator for the edge-score moments: decimal sums are exact,
+# so their value cannot depend on the order shuffle blocks arrive in
+# (a double sum — F.avg/F.stddev_pop — can differ in the last ulp from
+# run to run). Holds |score| < 1e10 with 18 decimals.
+_EXACT = "decimal(38,18)"
+
+
 def cluster_edge_stats(edges: DataFrame, labels: DataFrame) -> DataFrame:
-    """Per-cluster edge statistics: n_edges, avg/stddev of edge score.
-    `edges` = scored match edges (src, dst, score); `labels` =
-    (node, component)."""
+    """Per-cluster edge statistics: n_edges, avg/stddev (population) of
+    edge score. `edges` = scored match edges (src, dst, score); `labels`
+    = (node, component).
+
+    Bit-deterministic under any partitioning: each score and its square
+    are rounded to 18 decimals per row, summed exactly, and converted
+    to double once. The one-pass variance E[x²] - E[x]² cancels to about
+    ±1e-16 when the scores are all equal, so that case (min == max, a
+    one-edge cluster included) is exactly 0, as stddev_pop gives, and
+    the rest is clamped at 0."""
     lab = labels.withColumnRenamed("node", "src").withColumnRenamed("component", "cluster")
     e = edges.join(lab, "src")
-    return e.groupBy("cluster").agg(
-        F.count("*").alias("n_edges"),
-        F.avg("score").alias("avg_edge_score"),
-        F.coalesce(F.stddev_pop("score"), F.lit(0.0)).alias("std_edge_score"),
+    s = F.col("score")
+    n = F.col("__n")
+    mean = F.col("__s1").cast("double") / n
+    var = F.col("__s2").cast("double") / n - mean * mean
+    return (
+        e.groupBy("cluster")
+        .agg(
+            F.count("*").alias("n_edges"),
+            F.count(s).alias("__n"),
+            F.sum(s.cast(_EXACT)).alias("__s1"),
+            F.sum((s * s).cast(_EXACT)).alias("__s2"),
+            (F.min(s) == F.max(s)).alias("__flat"),
+        )
+        .select(
+            "cluster",
+            "n_edges",
+            mean.alias("avg_edge_score"),
+            F.when(F.col("__flat"), F.lit(0.0))
+            .otherwise(F.coalesce(F.sqrt(F.greatest(var, F.lit(0.0))), F.lit(0.0)))
+            .alias("std_edge_score"),
+        )
     )
 
 

@@ -488,7 +488,9 @@ def embedding_dup_pairs(
     # broadcast explicitly while the corpus is small (beyond the gate a
     # shuffle join is the right plan anyway).
     base = base.localCheckpoint()
-    n_vecs = base.count()
+    # (rows, max dim) in one action: gates the broadcast and the collect
+    shape = _vector_table_shape(base)
+    n_vecs = shape[0]
     attach = F.broadcast(base) if n_vecs <= 500_000 else base
     # r6 (second session): materialize the (id, bucket) sketch rows —
     # both sides of the bucket self-join referenced the sketch UDF's
@@ -523,7 +525,7 @@ def embedding_dup_pairs(
     # vectors; anything else keeps the JVM expression path.
     if n_vecs <= 500_000:
         kernel_out = _cosine_verify_kernel(
-            cand, base, float(cosine_floor), n_vecs=n_vecs
+            cand, base, float(cosine_floor), shape=shape
         )
         if kernel_out is not None:
             return kernel_out
@@ -537,8 +539,18 @@ def embedding_dup_pairs(
     )
 
 
+def _vector_table_shape(base: DataFrame) -> tuple[int, int]:
+    """(rows, max vector length) of an (id, v) table in one action; a
+    table of only null vectors has max length 0."""
+    row = base.agg(F.count("*"), F.max(F.size("v"))).first()
+    return int(row[0]), int(row[1] or 0)
+
+
 def _cosine_verify_kernel(
-    cand: DataFrame, base: DataFrame, floor: float, n_vecs: int | None = None
+    cand: DataFrame,
+    base: DataFrame,
+    floor: float,
+    shape: tuple[int, int] | None = None,
 ):
     """mapInArrow exact-cosine verification of (id_a, id_b) candidates
     against a collected (id, vector) table. Returns None when the
@@ -555,14 +567,12 @@ def _cosine_verify_kernel(
         return None
     # driver-memory gate (guide §5: no record-scale collect): the row
     # gate alone would let 500k HIGH-DIM vectors collect gigabytes —
-    # bound the element count (<= 32M doubles ~ 256MB) by probing one
-    # row's dimensionality before collecting
-    head = base.select("v").head(1)
-    if head and head[0][0] is not None:
-        if n_vecs is None:
-            n_vecs = base.count()
-        if len(head[0][0]) * n_vecs > 32_000_000:
-            return None
+    # bound the element count (<= 32M doubles ~ 256MB) by the MEASURED
+    # maximum dimensionality (`shape`, from _vector_table_shape): a
+    # one-row probe would pass a ragged table whose first row is short
+    n_vecs, max_dim = shape if shape is not None else _vector_table_shape(base)
+    if max_dim * n_vecs > 32_000_000:
+        return None
     pdf = base.toPandas()
     if len(pdf) == 0:
         return cand.sparkSession.createDataFrame(

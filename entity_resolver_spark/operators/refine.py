@@ -29,7 +29,7 @@ from entity_resolver_spark.functions.similarity import (
     sparse_cosine_udf,
 )
 from entity_resolver_spark.operators.components import connected_components
-from entity_resolver_spark.lineage import eager_cut
+from entity_resolver_spark.lineage import counted_cut, eager_cut
 
 # ---------------------------------------------------------------------------
 # broadcast size gates (scale discipline)
@@ -104,14 +104,6 @@ MERGE_TEXT_CAP = 6 * STRING_SIM_PREFIX
 
 def _maybe_broadcast(df: DataFrame, n_rows: int, cap: int) -> DataFrame:
     return F.broadcast(df) if n_rows <= cap else df
-
-
-def _materialize(df: DataFrame) -> tuple[DataFrame, int]:
-    """localCheckpoint + count: the pattern every refinement pass uses to
-    (a) stop plan re-execution across its 2+ consumers and (b) learn the
-    row count that gates broadcast decisions."""
-    out = df.transform(eager_cut)
-    return out, out.count()
 
 
 def _drop_hot_keys(keyed: DataFrame, key_col: str, cap: int) -> DataFrame:
@@ -194,7 +186,7 @@ def merge_clusters_vector(
     with exact sparse cosine; merged via connected components; relabel
     = min cluster id (largest-wins determinism is subsumed because ids
     are min member ids)."""
-    prof, _ = _materialize(cluster_profiles(records, cluster_col))
+    prof = eager_cut(cluster_profiles(records, cluster_col))
     keyed = _drop_hot_keys(
         prof.select(
             F.col(cluster_col).alias("c"), "c_idx", "c_val",
@@ -274,7 +266,7 @@ def merge_clusters_string(
     ScoringConfig.lev_prefix_chars."""
     from entity_resolver_spark.operators.canonical import canonical_by_frequency
 
-    canon, _ = _materialize(canonical_by_frequency(records, cluster_col))
+    canon = eager_cut(canonical_by_frequency(records, cluster_col))
     prefix_keys = canon.select(
         cluster_col,
         F.concat(F.lit("p:"), F.substring(F.col("canonical_text"), 1, 16)).alias("k"),
@@ -320,7 +312,7 @@ def merge_clusters_string(
     )
     # two consumers read pairs0 (the fast path and the window chain) —
     # materialize once or the key join + dedup executes per branch
-    pairs0, _ = _materialize(
+    pairs0 = eager_cut(
         a.join(b, "k")
         .where(F.col("ca") < F.col("cb"))
         .dropDuplicates(["ca", "cb"])  # a pair can arrive via several keys
@@ -356,14 +348,14 @@ def merge_clusters_string(
         # centroid cosine co-gate: built ONLY for clusters that survived
         # the string gates (semi-join keeps the profile pass bounded by
         # the candidate set, not the cluster count)
-        rest, n_rest = _materialize(rest)
+        rest, n_rest = counted_cut(rest)
         if n_rest > 0:
             cc = (
                 rest.select(F.col("ca").alias(cluster_col))
                 .unionByName(rest.select(F.col("cb").alias(cluster_col)))
                 .distinct()
             )
-            prof, n_prof = _materialize(
+            prof, n_prof = counted_cut(
                 cluster_profiles(
                     records.join(cc, cluster_col, "left_semi"), cluster_col
                 ).select(cluster_col, "c_idx", "c_val")
@@ -404,11 +396,11 @@ def _apply_merge(records: DataFrame, merge_edges: DataFrame, cluster_col: str) -
     # (expensive) candidate-scoring plan and throw the result away, then
     # connected_components' own input checkpoint would execute it AGAIN
     # (measured 103s of pure double-compute at 3k clusters)
-    merge_edges, n_edges = _materialize(merge_edges.select("src", "dst"))
+    merge_edges, n_edges = counted_cut(merge_edges.select("src", "dst"))
     if n_edges == 0:
         return records
     labels = connected_components(merge_edges)
-    remap, n_remap = _materialize(
+    remap, n_remap = counted_cut(
         labels.withColumnRenamed("node", cluster_col).withColumnRenamed("component", "__m")
     )
     return (
@@ -447,7 +439,7 @@ def _string_evidence_veto(
     from entity_resolver_spark.operators.canonical import canonical_by_frequency
 
     win = STRING_SIM_PREFIX
-    suspects, n_susp = _materialize(
+    suspects, n_susp = counted_cut(
         flagged.where(F.col("__evict")).select(
             "conv_id",
             F.col(cluster_col).alias("__vc"),
@@ -459,7 +451,7 @@ def _string_evidence_veto(
     if n_susp == 0:
         return flagged
     cids = suspects.select(F.col("__vc").alias(cluster_col)).distinct()
-    canon, n_canon = _materialize(
+    canon, n_canon = counted_cut(
         canonical_by_frequency(
             records.join(cids, cluster_col, "left_semi"), cluster_col
         ).select(
@@ -484,7 +476,7 @@ def _string_evidence_veto(
     head_jw = jw_expr(
         F.substring(F.col("__stxt"), 1, win), F.substring(F.col("__ctxt"), 1, win)
     )
-    veto, n_veto = _materialize(
+    veto, n_veto = counted_cut(
         j.where(
             (F.col("__sh") == F.col("__ch"))
             | (
@@ -564,7 +556,7 @@ def evict_outliers(
     flagged suspects are checked, canonicals are built only for their
     clusters (semi-join), windows cap the DP at STRING_SIM_PREFIX
     chars."""
-    prof, n_prof = _materialize(
+    prof, n_prof = counted_cut(
         cluster_profiles(records, cluster_col).select(cluster_col, "c_idx", "c_val", "size")
     )
     scored = (
@@ -636,7 +628,7 @@ def evict_outliers(
     # the reference bounds the analogous subset by sampling,
     # validator.py:805-815). Materialized because the veto branch adds
     # a second consumer of the flagged frame below.
-    v3, _ = _materialize(v3)
+    v3 = eager_cut(v3)
     flagged = (
         voted.join(v3, "conv_id", "left")
         .fillna({"__v3": False})
@@ -712,7 +704,7 @@ def reassign_singletons(
     # existence checks from its rows — the previous
     # singles.isEmpty()/multi.isEmpty() pair executed the un-cut
     # records⋈sizes plan twice before any work happened
-    sizes, n_sizes = _materialize(
+    sizes, n_sizes = counted_cut(
         records.groupBy(cluster_col).agg(F.count("*").alias("__n"))
     )
     counts = sizes.agg(
@@ -725,7 +717,7 @@ def reassign_singletons(
     singles = rec.where(F.col("__n") == 1).select("conv_id", "vec_idx", "vec_val", cluster_col)
     multi = rec.where(F.col("__n") > 1)
 
-    prof, n_prof = _materialize(cluster_profiles(multi, cluster_col))
+    prof, n_prof = counted_cut(cluster_profiles(multi, cluster_col))
     # avg member->centroid cosine per cluster (reference avg_probability
     # analog, validator.py:1435) — one bounded pass over multi members
     member_q = (
@@ -804,7 +796,7 @@ def reassign_singletons(
         )
         .select("conv_id", F.col("cand_cluster").alias("__new"))
     )
-    assign, n_assign = _materialize(assign)
+    assign, n_assign = counted_cut(assign)
     return (
         records.join(_maybe_broadcast(assign, n_assign, MAP_BROADCAST_CAP), "conv_id", "left")
         .withColumn(cluster_col, F.coalesce(F.col("__new"), F.col(cluster_col)))
@@ -838,7 +830,7 @@ def enrich_metadata(
     w = W.partitionBy(cluster_col).orderBy(
         F.col("__f").desc(), F.col("__tools_s").asc()
     )
-    donor, n_donor = _materialize(
+    donor, n_donor = counted_cut(
         freq.withColumn("__rk", F.row_number().over(w))
         .where(F.col("__rk") == 1)
         .select(cluster_col, F.col("__tools_s").alias("__donor_tools"))

@@ -20,10 +20,13 @@ def content_hash(df: DataFrame, float_dp: int = 3) -> str:
     xxhash64 over every row (same construction as the pipeline's run
     fingerprint, pipeline.py) — partitioning- and row-order-independent,
     so two byte-identical results hash equal on any cluster layout.
-    Float columns are rounded to `float_dp` decimals first: the values
-    are deterministic per run (proven by the determinism test), but a
-    pinned GOLDEN hash should not hinge on the last bits of a
-    shuffle-order-sensitive double sum. Returns 'n_rows:xor_hash'."""
+    Float columns are rounded to `float_dp` decimals first. The
+    resolver's confidence_score is bit-equal across runs and shuffle
+    partition counts (its edge moments are exact decimal sums; the
+    determinism test pins it), but a caller's frame may carry doubles
+    from shuffle-order-sensitive sums (F.avg, F.sum on doubles), and a
+    pinned GOLDEN hash should not hinge on their last bits.
+    Returns 'n_rows:xor_hash'."""
     cols = []
     for f in df.schema.fields:
         c = F.col(f.name)

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
+from entity_resolver_spark.lineage import counted_cut
 from entity_resolver_spark.operators.collapse import TURN_SEP
 from entity_resolver_spark.operators.components import connected_components
 
@@ -41,8 +42,13 @@ def consolidate_identical(records: DataFrame, key_col: str = "norm_text", cluste
     key_clusters = records.select(key_col, cluster_col).distinct()
     a = key_clusters.select(F.col(key_col).alias("k"), F.col(cluster_col).alias("src"))
     b = key_clusters.select(F.col(key_col).alias("k"), F.col(cluster_col).alias("dst"))
-    edges = a.join(b, "k").where(F.col("src") < F.col("dst")).select("src", "dst").distinct()
-    if edges.isEmpty():
+    # the job that materializes the edges also answers "any?" — an
+    # isEmpty() probe would run the records plan once for the answer
+    # and again for the components input
+    edges, n_edges = counted_cut(
+        a.join(b, "k").where(F.col("src") < F.col("dst")).select("src", "dst").distinct()
+    )
+    if n_edges == 0:
         return records
     labels = connected_components(edges)
     remap = labels.withColumnRenamed("node", cluster_col).withColumnRenamed(
@@ -80,7 +86,8 @@ def enforce_canonical_fd(
     C0 controls to space (normalize.py), so no pre-existing canonical
     text can contain it and the repaired name can never collide with a
     real one (a plain ' #2' suffix could). Cost is one agg over
-    (name, cluster) pairs, tiny vs the record table."""
+    (name, cluster) pairs, tiny vs the record table; the repair rows
+    are materialized once, by the job that counts them."""
     pairs = records.groupBy(name_col, cluster_col).agg(
         F.min("conv_id").alias("__min_id")
     )
@@ -90,14 +97,16 @@ def enforce_canonical_fd(
             W.partitionBy(name_col).orderBy(F.col("__min_id").asc(), F.col(cluster_col).asc())
         ),
     )
-    fix = ranked.where(F.col("__rank") > 1).select(
-        name_col,
-        cluster_col,
-        F.concat(
-            F.col(name_col), F.lit(TURN_SEP + "#"), F.col("__rank").cast("string")
-        ).alias("__fixed_name"),
+    fix, n_fix = counted_cut(
+        ranked.where(F.col("__rank") > 1).select(
+            name_col,
+            cluster_col,
+            F.concat(
+                F.col(name_col), F.lit(TURN_SEP + "#"), F.col("__rank").cast("string")
+            ).alias("__fixed_name"),
+        )
     )
-    if fix.isEmpty():
+    if n_fix == 0:
         return records
     return (
         records.join(fix, [name_col, cluster_col], "left")

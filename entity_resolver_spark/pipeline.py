@@ -161,7 +161,7 @@ class EntityResolverPipeline:
         edges = ckpt.stage(
             "edges",
             lambda: edges_from_scores(scored, cfg.scoring.edge_threshold),
-            extra_metrics=lambda df: {"match_edges": df.count()},
+            extra_metrics=lambda df, rows: {"match_edges": rows},
         )
 
         labels = ckpt.stage(

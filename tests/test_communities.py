@@ -1,6 +1,10 @@
 """Tests for label_propagation (G4 analog) and ensemble_clusters (G8)."""
 
+import random
+import time
+
 import pyspark.sql.functions as F
+import pytest
 
 from entity_resolver_spark.operators.communities import (
     ensemble_clusters,
@@ -47,6 +51,102 @@ def test_lpa_strong_bridge_merges(spark):
     )
     got = {r["id"]: r["community"] for r in label_propagation(e, max_iter=8).collect()}
     assert len(set(got.values())) == 1
+
+
+# ---------------------------------------------------------------------------
+# driver rounds vs distributed rounds: the gate must not change a label
+# (two-path parity in the manner of spark-rapids'
+# assert_gpu_and_cpu_are_equal_collect)
+# ---------------------------------------------------------------------------
+
+def _assert_paths_equal(edges, **kw):
+    driver = sorted(map(tuple, label_propagation(edges, **kw).collect()))
+    dist = sorted(
+        map(tuple, label_propagation(edges, driver_solve_max_edges=0, **kw).collect())
+    )
+    assert driver == dist and driver
+    return dict(driver)
+
+
+def _random_tied_graph(seed, n_nodes=40, n_edges=90):
+    """Weights drawn from a few values, so many neighbor sums tie; the
+    values are not dyadic, so a double sum of a tie can come out unequal
+    in the last ulp depending on the order of its terms. Some pairs
+    arrive in both directions with different weights (max-weight
+    dedup)."""
+    rng = random.Random(seed)
+    return [
+        (rng.randrange(n_nodes), rng.randrange(n_nodes), rng.choice([0.1, 0.2, 0.3, 0.3, 0.7]))
+        for _ in range(n_edges)
+    ]
+
+
+
+def test_lpa_ties_are_exact_on_both_paths(spark):
+    """Label scores are exact sums of the decimal weights: 0.1 + 0.2
+    ties 0.3 (in doubles it is 0.30000000000000004 and wins), so the
+    tie rule (community asc) picks "k" on both paths. Parity 1 for x and
+    the two hubs: round 0 moves a, a2 to "p" and b to "k"; round 1 moves
+    x."""
+    edges = [
+        ("x", "a", 0.1), ("x", "a2", 0.2), ("x", "b", 0.3),
+        ("a", "p", 1.0), ("a2", "p", 1.0), ("b", "k", 1.0),
+    ]
+    df = spark.createDataFrame(edges, "src string, dst string, weight double")
+    parity = lambda c: F.when(c.isin("x", "p", "k"), 1).otherwise(0)  # noqa: E731
+    got = _assert_paths_equal(df, max_iter=2, parity_expr=parity)
+    assert got["x"] == "k"
+
+
+@pytest.mark.parametrize("bridge_w", [0.1, 0.5, 1.0])
+def test_lpa_driver_matches_distributed_bridged_triangles(spark, bridge_w):
+    _assert_paths_equal(_bridged_triangles(spark, bridge_w), max_iter=8)
+
+
+@pytest.mark.parametrize("seed", [1, 2, 3])
+def test_lpa_driver_matches_distributed_string_ids_with_ties(spark, seed):
+    edges = [(f"n{a:02d}", f"n{b:02d}", w) for a, b, w in _random_tied_graph(seed)]
+    df = spark.createDataFrame(edges, "src string, dst string, weight double")
+    got = _assert_paths_equal(df, max_iter=8)
+    assert len(set(got.values())) < len(got)  # propagation actually happened
+
+
+@pytest.mark.parametrize("seed", [4, 5, 6])
+def test_lpa_driver_matches_distributed_long_ids_pmod_parity(spark, seed):
+    df = spark.createDataFrame(_random_tied_graph(seed), "src long, dst long, weight double")
+    _assert_paths_equal(df, max_iter=8, parity_expr=lambda c: F.pmod(c, F.lit(2)))
+
+
+def test_lpa_driver_matches_distributed_unweighted(spark):
+    df = spark.createDataFrame(
+        [(a, b) for a, b, _ in _random_tied_graph(7)], "src long, dst long"
+    )
+    _assert_paths_equal(df, max_iter=6, weight_col=None)
+
+
+def _held_rdd_ids(spark) -> set[int]:
+    return {i.id() for i in spark.sparkContext._jsc.sc().getRDDStorageInfo()}
+
+
+def test_lpa_distributed_releases_superseded_rounds(spark):
+    """The distributed rounds free each superseded labels checkpoint and
+    the adjacency: what a call leaves held is its output, whatever the
+    round count. A 40-node unit-weight chain is still changing at round
+    8 (the minimum label moves about one hop per round)."""
+    ids = [f"n{i:03d}" for i in range(40)]
+    chain = spark.createDataFrame(
+        [(a, b, 1.0) for a, b in zip(ids, ids[1:])], "src string, dst string, weight double"
+    )
+    held = {}
+    for rounds in (2, 8):
+        before = _held_rdd_ids(spark)
+        out = label_propagation(chain, max_iter=rounds, driver_solve_max_edges=0)
+        deadline = time.time() + 20
+        while len(_held_rdd_ids(spark) - before) > 1 and time.time() < deadline:
+            time.sleep(0.2)  # unpersist(blocking=False) is async
+        held[rounds] = len(_held_rdd_ids(spark) - before)
+        assert out.count() == 40  # the live generation survives the releases
+    assert held[8] <= held[2] <= 1, held
 
 
 def test_ensemble_rescue_mint_keep(spark):

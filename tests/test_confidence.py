@@ -77,3 +77,45 @@ def test_multi_member_cluster_unpenalized_when_canonical_close(spark):
     for r in out.values():
         assert r["confidence_score"] > 0.8
         assert not r["needs_review"]
+
+
+def test_cluster_edge_stats_values_and_partition_invariance(spark):
+    """Edge moments match the population mean/stddev, a one-edge
+    cluster and clusters of several equal non-dyadic scores have stddev
+    exactly 0, and the doubles are bit-equal however the edges are
+    partitioned."""
+    import random
+    import statistics
+
+    from entity_resolver_spark.operators.confidence import cluster_edge_stats
+
+    rng = random.Random(11)
+    edges = [(f"s{i}", f"d{i}", rng.uniform(0.5, 1.0)) for i in range(300)]
+    edges.append(("lone", "x", 0.8125))
+    labels = [(f"s{i}", f"c{i % 7}") for i in range(300)] + [("lone", "solo")]
+    flat = {"flat95": 0.95, "flat1": 0.1, "flat3": 1 / 3, "flat7": 0.7}
+    for c, w in flat.items():
+        for k in range(5):
+            edges.append((f"{c}_{k}", "y", w))
+            labels.append((f"{c}_{k}", c))
+    edf = spark.createDataFrame(edges, "src string, dst string, score double")
+    ldf = spark.createDataFrame(labels, "node string, component string")
+
+    def stats(n_parts):
+        out = cluster_edge_stats(edf.repartition(n_parts), ldf.repartition(n_parts))
+        return {r["cluster"]: (r["n_edges"], r["avg_edge_score"], r["std_edge_score"])
+                for r in out.collect()}
+
+    got = stats(1)
+    for c in range(7):
+        xs = [w for i, (_, _, w) in enumerate(edges[:300]) if i % 7 == c]
+        n, mean, std = got[f"c{c}"]
+        assert n == len(xs)
+        assert mean == pytest.approx(statistics.fmean(xs), abs=1e-15)
+        assert std == pytest.approx(statistics.pstdev(xs), abs=1e-12)
+    assert got["solo"] == (1, 0.8125, 0.0)
+    for c, w in flat.items():
+        n, mean, std = got[c]
+        assert n == 5 and std == 0.0
+        assert mean == pytest.approx(w, abs=1e-15)
+    assert stats(7) == got and stats(3) == got

@@ -96,6 +96,27 @@ def test_embedding_verify_kernel_matches_expression_path(spark):
     ) is None
 
 
+def test_cosine_verify_gate_uses_max_dimension(spark, monkeypatch):
+    """The driver-memory gate bounds rows x the LARGEST vector length: a
+    ragged table whose first row is short (dim 2, the rest dim 10,000;
+    3,201 x 10,000 > 32M elements) must be refused before any collect."""
+    from entity_resolver_spark.operators import dedup as D
+
+    def no_collect(self):
+        raise AssertionError("toPandas called past the memory gate")
+
+    base = spark.range(0, 3201, 1, 4).select(
+        F.col("id"),
+        F.when(F.col("id") == 0, F.array(F.lit(1.0), F.lit(2.0)))
+        .otherwise(F.array_repeat(F.lit(0.5), 10_000))
+        .alias("v"),
+    )
+    assert len(base.select("v").head(1)[0][0]) == 2  # the one-row probe's view
+    cand = spark.createDataFrame([(0, 1)], "id_a long, id_b long")
+    monkeypatch.setattr(type(base), "toPandas", no_collect)
+    assert D._cosine_verify_kernel(cand, base, 0.9) is None
+
+
 def test_ngram_size_prefilter_keeps_boundary_pairs(spark):
     """The r6 size-ratio prefilter (J >= t implies t*max <= min over
     DISTINCT shingle counts) must keep pairs sitting exactly ON the

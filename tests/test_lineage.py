@@ -153,3 +153,65 @@ def test_release_checkpoint_frees_blocks_and_successor_survives(spark):
     )
     assert gen2.count() == 97
     assert gen2.agg(F.sum("count")).collect()[0][0] == 200_000
+
+
+# ---------------------------------------------------------------------------
+# counted_cut: the cut that also counts, from one Spark job
+# ---------------------------------------------------------------------------
+
+def test_counted_cut_count_matches_df_count(spark):
+    from entity_resolver_spark.lineage import counted_cut
+
+    df = spark.range(1000).groupBy((F.col("id") % 37).alias("k")).count()
+    out, n = counted_cut(df)
+    assert n == df.count() == 37
+    assert out.count() == 37
+    assert sorted(r["k"] for r in out.collect()) == list(range(37))
+
+
+def test_counted_cut_runs_the_plan_once(spark):
+    """The count comes from the job that fills the checkpoint, and every
+    later read hits the checkpoint: a row-tagging UDF sees each row
+    exactly once across the cut and three further reads."""
+    from entity_resolver_spark.lineage import counted_cut
+
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tag(x):
+        seen.add(1)
+        return x
+
+    out, n = counted_cut(spark.range(0, 200, 1, 4).select(tag("id").alias("id")))
+    assert n == 200
+    assert out.count() == 200
+    assert len(out.collect()) == 200
+    assert out.agg(F.sum("id")).first()[0] == sum(range(200))
+    assert seen.value == 200
+
+
+def test_counted_cut_degraded_path(spark, monkeypatch):
+    """Without the rebuild APIs the helper still returns (frame, count),
+    through the plain-checkpoint fallback (one warning), and the count
+    still fills the checkpoint: later reads do not rerun the plan."""
+    from entity_resolver_spark.lineage import counted_cut
+
+    monkeypatch.setattr(lineage, "_try_rebuild", lambda ck: None)
+    monkeypatch.setattr(lineage, "_REBUILD_AVAILABLE", None)
+    seen = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def tag(x):
+        seen.add(1)
+        return x
+
+    df = spark.range(6).select(tag("id").alias("id"), (F.col("id") * 3).alias("v"))
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        out, n = counted_cut(df)
+        out2, n2 = counted_cut(out.where(F.col("v") > 3))
+    assert n == 6 and out.count() == 6
+    assert n2 == 4 and {r["v"] for r in out2.collect()} == {6, 9, 12, 15}
+    assert seen.value == 6
+    assert lineage._REBUILD_AVAILABLE is False
+    assert len([w for w in caught if issubclass(w.category, RuntimeWarning)]) == 1

@@ -217,6 +217,7 @@ def test_profile_broadcast_gated_by_cluster_count(spark, monkeypatch):
     re-print its lineage — planned under the default conf — inside
     every InMemoryRelation and false-positive the substring check)."""
     import entity_resolver_spark.operators.refine as refine
+    from entity_resolver_spark.lineage import counted_cut
 
     rows = [
         ("a1", "c1", A), ("a2", "c1", A + " iota"),
@@ -231,7 +232,7 @@ def test_profile_broadcast_gated_by_cluster_count(spark, monkeypatch):
     try:
         # the exact join evict_outliers builds (records x profiles),
         # inspected BEFORE the eager materialization hides it
-        prof, n_prof = refine._materialize(
+        prof, n_prof = counted_cut(
             cluster_profiles(recs).select("cluster", "c_idx", "c_val", "size")
         )
         hinted = recs.join(
