@@ -25,7 +25,7 @@ import time
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from entity_resolver_spark.lineage import counted_cut
+from entity_resolver_spark.lineage import counted_cut, release_checkpoint
 
 
 class CheckpointManager:
@@ -36,6 +36,7 @@ class CheckpointManager:
         self.resume = resume
         self.run_fingerprint = run_fingerprint
         self.metrics: list[dict] = []
+        self._pass: dict = {}
         if base_dir:
             os.makedirs(base_dir, exist_ok=True)
 
@@ -63,10 +64,16 @@ class CheckpointManager:
 
         Without a base_dir this degrades to compute() + localCheckpoint
         (lineage cut only — still required for iterative stages); the
-        job that fills the checkpoint also counts its rows."""
+        job that fills the checkpoint also counts its rows. A compute
+        that ends in `cut_pass` is not cut a second time."""
         t0 = time.time()
+        self._pass = {"stage": name, "t": t0, "cut": None, "rows": None}
         if self.base_dir is None:
-            df, rows = counted_cut(compute())
+            df = compute()
+            if df is self._pass["cut"]:
+                rows = self._pass["rows"]
+            else:
+                df, rows = counted_cut(df)
             self._record(name, df, t0, resumed=False, extra=extra_metrics, rows=rows)
             return df
 
@@ -95,6 +102,37 @@ class CheckpointManager:
                 f,
             )
         self._record(name, df, t0, resumed=False, extra=extra_metrics, rows=rows)
+        return df
+
+    def cut_pass(self, name: str, df: DataFrame) -> DataFrame:
+        """Materialize one pass inside the running stage's compute and
+        record it as a `<stage>.<name>` metrics row: rows from the job
+        that fills the cut, seconds since the stage's previous pass.
+
+        The stage's pass chain is linear, so once the new generation is
+        materialized the one it supersedes is released — otherwise a
+        stage holds one records-sized generation per pass and later
+        stages pay storage eviction (lineage.release_checkpoint). The
+        stage's input and the frames of earlier stages are never
+        released. A pass that handed back the previous cut unchanged is
+        not cut again."""
+        p = self._pass
+        if df is p["cut"]:
+            rows = p["rows"]
+        else:
+            df, rows = counted_cut(df)
+            if p["cut"] is not None:
+                release_checkpoint(p["cut"])
+        now = time.time()
+        self.metrics.append(
+            {
+                "stage": f"{p['stage']}.{name}",
+                "rows": rows,
+                "seconds": round(now - p["t"], 3),
+                "resumed": False,
+            }
+        )
+        p.update(t=now, cut=df, rows=rows)
         return df
 
     def _record(self, name, df, t0, resumed, extra, rows=None):

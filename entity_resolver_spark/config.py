@@ -1,58 +1,29 @@
 """Pipeline configuration.
 
 Mirrors the *structure* of the reference's pydantic config
-(/root/reference/entity_resolver/config/schema.py — columns /
-normalization / blocking / scoring / clustering / validation / output
-sections, strict validation, one global random seed propagated
-everywhere) without porting its GPU-specific knobs.
+(/root/reference/entity_resolver/config/schema.py — normalization /
+blocking / scoring / clustering / validation / output sections, strict
+validation, one global random seed propagated everywhere) without
+porting its GPU-specific knobs.
 """
 
 from __future__ import annotations
 
-from pydantic import BaseModel, ConfigDict, Field, model_validator
-
-
-class ColumnsConfig(BaseModel):
-    """Input column names (reference: config/schema.py:240-266)."""
-
-    model_config = ConfigDict(extra="forbid")
-
-    conv_id: str = "conv_id"
-    turn_idx: str = "turn_idx"
-    role: str = "role"
-    text: str = "text"
-    tool: str = "tool"
-    ts: str = "ts"
+from pydantic import BaseModel, ConfigDict, Field
 
 
 class NormalizationConfig(BaseModel):
-    """Text normalization (reference: normalizer.py:212-415).
-
-    lowercase / strip_punctuation / collapse_whitespace mirror the
-    reference's knobs but the Spark chain is fixed (one fused pass) —
-    setting any to False raises rather than silently no-op'ing.
-    Iterative suffix removal (P5) lives in functions/entity_names.py
-    with its pass count there (SUFFIX_PASSES)."""
+    """Text normalization (reference: normalizer.py:212-415). The chain
+    (lowercase, punctuation strip, whitespace collapse) is one fused
+    pass; only NFKC folding is switchable. Iterative suffix removal
+    (P5) lives in functions/entity_names.py with its pass count there
+    (SUFFIX_PASSES)."""
 
     model_config = ConfigDict(extra="forbid")
 
-    lowercase: bool = True
     nfkc: bool = True
-    strip_punctuation: bool = True
-    collapse_whitespace: bool = True
     min_length: int = 2  # below this, fall back to minimal normalization
     empty_fallback: str = "unknown_entity"
-
-    @model_validator(mode="after")
-    def _fixed_chain(self) -> "NormalizationConfig":
-        for knob in ("lowercase", "strip_punctuation", "collapse_whitespace"):
-            if not getattr(self, knob):
-                raise ValueError(
-                    f"normalization.{knob}=False is not supported: the "
-                    "normalization chain is a single fused pass (only nfkc "
-                    "is independently switchable)"
-                )
-        return self
 
 
 class BlockingConfig(BaseModel):
@@ -268,7 +239,6 @@ class ResolverConfig(BaseModel):
 
     model_config = ConfigDict(extra="forbid")
 
-    columns: ColumnsConfig = Field(default_factory=ColumnsConfig)
     normalization: NormalizationConfig = Field(default_factory=NormalizationConfig)
     blocking: BlockingConfig = Field(default_factory=BlockingConfig)
     scoring: ScoringConfig = Field(default_factory=ScoringConfig)

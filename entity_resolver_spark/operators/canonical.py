@@ -37,37 +37,22 @@ LEV_MAX_CHARS = 64
 _HASH_DIM = 1024
 
 
-def _lev(a: str, b: str) -> int:
-    """Levenshtein with the row DP fully vectorized in NumPy: the
-    insertion recurrence cur[j] = min(cand[j], cur[j-1]+1) equals
-    min.accumulate(cand[j]-j)+j, so each row is O(1) NumPy calls."""
-    if a == b:
-        return 0
-    if len(a) < len(b):
-        a, b = b, a
-    if not b:
-        return len(a)
-    bb = np.frombuffer(b.encode("utf-32-le"), dtype=np.uint32)
-    prev = np.arange(len(b) + 1, dtype=np.int64)
-    idx = np.arange(1, len(b) + 1, dtype=np.int64)
-    for ci, ca in enumerate(a, start=1):
-        cost = (bb != np.uint32(ord(ca))).astype(np.int64)
-        cand = np.minimum(prev[1:] + 1, prev[:-1] + cost)
-        cand = np.minimum(cand, ci + idx)  # bound via cur[0] = ci
-        cur = np.minimum.accumulate(cand - idx) + idx
-        prev = np.empty(len(b) + 1, dtype=np.int64)
-        prev[0] = ci
-        prev[1:] = cur
-    return int(prev[-1])
-
-
 def _lev_matrix(strings: list[str]) -> np.ndarray:
-    """Pairwise Levenshtein distances. Inputs are capped, small groups."""
+    """Pairwise Levenshtein distances from one C-kernel call over the
+    group's i<j pairs. Exact: the gate keeps every string at or below
+    LEV_MAX_CHARS codepoints, under the kernel's 256-codepoint cap."""
+    import pyarrow as pa
+
+    from entity_resolver_spark.functions import ckernels
+
     n = len(strings)
+    i, j = np.triu_indices(n, k=1)
+    d, _, _ = ckernels.lev_arrow(
+        pa.array([strings[k] for k in i], pa.string()),
+        pa.array([strings[k] for k in j], pa.string()),
+    )
     out = np.zeros((n, n), dtype=np.float64)
-    for i in range(n):
-        for j in range(i + 1, n):
-            out[i, j] = out[j, i] = _lev(strings[i], strings[j])
+    out[i, j] = out[j, i] = d.to_numpy()
     return out
 
 

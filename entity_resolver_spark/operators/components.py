@@ -147,9 +147,10 @@ def connected_components(
     instead of the star rounds: identical labels, and the
     ~4-shuffles-plus-action fixed cost per round disappears. The small
     path therefore costs two Spark jobs — cut-and-count, then the
-    collect. The refinement passes call this once per merge pass on
-    candidate sets that are usually tiny. The convergence fingerprint
-    is computed only on the distributed path.
+    collect. The refinement passes call this through
+    merge_through_components once per merge pass, on candidate sets
+    that are usually tiny. The convergence fingerprint is computed only
+    on the distributed path.
     """
     e, n_edges = counted_cut(
         edges.select("src", "dst").where(F.col("src") != F.col("dst")).distinct()
@@ -173,6 +174,33 @@ def connected_components(
     )
     members = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     return members.union(roots).groupBy("node").agg(F.min("component").alias("component"))
+
+
+def merge_through_components(
+    records: DataFrame, merge_edges: DataFrame, cluster_col: str = "cluster"
+) -> DataFrame:
+    """Merge the clusters that `merge_edges(src, dst)` connect, directly
+    or transitively: every member of a merged group is relabelled with
+    the group's min cluster id (left join + coalesce, so clusters no edge
+    touches keep their id).
+
+    The job that cuts the edges also counts them, and with no edge the
+    input frame itself comes back: no components call and no relabel
+    join, which the refinement passes hit on most corpora. The labels
+    need no broadcast hint: under the driver gate they are a pandas-built
+    LocalRelation that Catalyst sizes itself, and above it AQE decides
+    from runtime sizes."""
+    merge_edges, n_edges = counted_cut(merge_edges.select("src", "dst"))
+    if n_edges == 0:
+        return records
+    remap = connected_components(merge_edges).select(
+        F.col("node").alias(cluster_col), F.col("component").alias("__merged")
+    )
+    return (
+        records.join(remap, cluster_col, "left")
+        .withColumn(cluster_col, F.coalesce(F.col("__merged"), F.col(cluster_col)))
+        .drop("__merged")
+    )
 
 
 def attach_labels(

@@ -14,7 +14,17 @@ orders of magnitude smaller than the record table (one row per
 cluster), so the pairwise steps are cheap regardless of input scale;
 the only record-scale operations are the final relabel joins and the
 member-centroid cosine (one broadcast-join + one Arrow batch per
-partition). Components subsume the reference's union-find.
+partition).
+
+Each repeated step has one implementation:
+  * merge + relabel — components.merge_through_components, shared by
+    both merge passes and validate.consolidate_identical (G11); it
+    subsumes the reference's union-find and pointer-jumping;
+  * top-slot candidate join — _slot_candidates, shared by the vector
+    merge, the eviction margin vote and singleton reassignment;
+  * aligned head/mid/tail text windows — _text_key + _aligned_windows,
+    shared by the string merge (jw and lev on all three windows) and
+    the eviction string veto (jw on the head window only).
 """
 
 from __future__ import annotations
@@ -28,7 +38,8 @@ from entity_resolver_spark.functions.similarity import (
     lev_sim_expr,
     sparse_cosine_udf,
 )
-from entity_resolver_spark.operators.components import connected_components
+from entity_resolver_spark.operators.canonical import canonical_by_frequency
+from entity_resolver_spark.operators.components import merge_through_components
 from entity_resolver_spark.lineage import counted_cut, eager_cut
 
 # ---------------------------------------------------------------------------
@@ -61,7 +72,7 @@ MAP_BROADCAST_CAP = 2_000_000     # slim id->id / id->label maps
 #
 # The slot cap must be a SMALL constant, because it bounds the merge
 # pass's admitted work: candidates <= sum over kept keys of C(k,2)
-# <= (cap/2) * top_slots * n_clusters — linear in clusters only if cap
+# <= (cap/2) * TOP_SLOTS * n_clusters — linear in clusters only if cap
 # is O(1). The old value (2,000) admitted ~2M pairs per near-cap key,
 # and on a linear-ladder corpus (families grow, vocabulary fixed) the
 # number of near-cap keys grows with the corpus: measured merge_vector
@@ -72,8 +83,10 @@ MAP_BROADCAST_CAP = 2_000_000     # slim id->id / id->label maps
 # verification anyway. 64 retains every family-sized key (the split
 # fragments a merge must reunite share their family anchor slots,
 # df ~ 2-5 clusters) while holding worst-case candidates to
-# 32 * top_slots * n_clusters.
+# 32 * TOP_SLOTS * n_clusters.
 SLOT_KEY_CAP = 64
+# highest-weight centroid/vector slots used as candidate-join keys
+TOP_SLOTS = 4
 STRING_KEY_CAP = 500
 # rare-canonical-token keys must be RARE (block-family-sized, like
 # blocking.py's rare_max_df): a df cap at STRING_KEY_CAP would admit
@@ -124,15 +137,10 @@ def _drop_hot_keys(keyed: DataFrame, key_col: str, cap: int) -> DataFrame:
 # cluster profiles
 # ---------------------------------------------------------------------------
 
-def cluster_profiles(
-    records: DataFrame, cluster_col: str = "cluster", with_canonical: bool = False
-) -> DataFrame:
+def cluster_profiles(records: DataFrame, cluster_col: str = "cluster") -> DataFrame:
     """One row per cluster: L2-normalized centroid of member TF-IDF
-    vectors (sparse, as aligned arrays) and member count; optionally the
-    frequency-canonical text. Pure SQL: explode -> sum per slot ->
-    re-collect. The canonical is opt-in because none of the vector-space
-    consumers (evict/reassign/merge_vector) read it and its
-    window-over-records costs as much as the centroid itself."""
+    vectors (sparse, as aligned arrays) and member count. Pure SQL:
+    explode -> sum per slot -> re-collect."""
     slots = (
         records.select(cluster_col, F.arrays_zip("vec_idx", "vec_val").alias("z"))
         .select(cluster_col, F.explode("z").alias("e"))
@@ -153,21 +161,93 @@ def cluster_profiles(
         )
     )
     sizes = records.groupBy(cluster_col).agg(F.count("*").alias("size"))
-    out = centroid.join(sizes, cluster_col)
-    if with_canonical:
-        from entity_resolver_spark.operators.canonical import canonical_by_frequency
-
-        out = out.join(canonical_by_frequency(records, cluster_col), cluster_col)
-    return out
+    return centroid.join(sizes, cluster_col)
 
 
-def _top_slot_keys(c_idx, c_val, m: int = 4):
-    """The m highest-weight centroid slots as blocking keys (sorted by
+def _top_slot_keys(c_idx, c_val):
+    """The TOP_SLOTS highest-weight slots as blocking keys (sorted by
     weight desc, slot asc for determinism)."""
     z = F.arrays_zip(c_val.alias("w"), c_idx.alias("s"))
     # sort by (-w, s): negate weight inside a sortable struct
     ordered = F.array_sort(F.transform(z, lambda e: F.struct((-e["w"]).alias("nw"), e["s"].alias("s"))))
-    return F.transform(F.slice(ordered, 1, m), lambda e: e["s"])
+    return F.transform(F.slice(ordered, 1, TOP_SLOTS), lambda e: e["s"])
+
+
+def _slot_candidates(
+    profiles: DataFrame,
+    pair: list[str],
+    probe: DataFrame | None = None,
+    pair_filter=None,
+) -> DataFrame:
+    """(probe, profile) rows sharing one of their top-slot keys, one row
+    per `pair` (probe id, profile id), scored by exact sparse cosine of
+    the probe's vector (vec_idx, vec_val) against the profile centroid
+    (c_idx, c_val) into `cos`. `profiles` carries its id as `pair[1]`.
+
+    Profile-side keys covering more than SLOT_KEY_CAP profiles are
+    dropped; a probe key that is gone there cannot join, so a probe
+    frame needs no cap of its own. Without `probe` the profiles are
+    matched against themselves: the probe side is the same capped key
+    table (id renamed to `pair[0]`, centroid to vec_idx/vec_val), so
+    both join inputs are one plan whose exchanges Spark reuses —
+    exploding the probe side separately costs two more Spark jobs.
+    `pair_filter` runs before the dedup, so no excluded pair is ever
+    scored."""
+    keyed = _drop_hot_keys(
+        profiles.withColumn(
+            "__k", F.explode(_top_slot_keys(F.col("c_idx"), F.col("c_val")))
+        ),
+        "__k",
+        SLOT_KEY_CAP,
+    )
+    if probe is None:
+        probe = keyed.select(
+            "__k", F.col(pair[1]).alias(pair[0]),
+            F.col("c_idx").alias("vec_idx"), F.col("c_val").alias("vec_val"),
+        )
+    else:
+        probe = probe.withColumn(
+            "__k", F.explode(_top_slot_keys(F.col("vec_idx"), F.col("vec_val")))
+        )
+    cand = probe.join(keyed, "__k")
+    if pair_filter is not None:
+        cand = cand.where(pair_filter)
+    return (
+        cand.dropDuplicates(pair)
+        .drop("__k")
+        .withColumn(
+            "cos",
+            sparse_cosine_udf(
+                F.col("vec_idx"), F.col("vec_val"), F.col("c_idx"), F.col("c_val")
+            ),
+        )
+    )
+
+
+def _text_key(text, prefix: str) -> list:
+    """`text` capped at MERGE_TEXT_CAP, its full length and the xxhash64
+    of the full text, as <prefix>txt / <prefix>len / <prefix>h."""
+    return [
+        F.substring(text, 1, MERGE_TEXT_CAP).alias(f"{prefix}txt"),
+        F.length(text).alias(f"{prefix}len"),
+        F.xxhash64(text).alias(f"{prefix}h"),
+    ]
+
+
+def _aligned_windows(ta, la, tb, lb) -> list:
+    """[(window_a, window_b)] for the head, middle and tail windows of
+    STRING_SIM_PREFIX chars of two capped texts (`ta`, `tb`) with full
+    lengths `la`, `lb`. The offsets are ALIGNED TO THE SHORTER text
+    (head at 1, middle at min_len/2, tail ending at min_len), clamped to
+    MERGE_TEXT_CAP, and taken at the same offsets on both texts."""
+    win = STRING_SIM_PREFIX
+    lm = F.least(la, lb, F.lit(MERGE_TEXT_CAP))
+    starts = (
+        F.lit(1),
+        F.greatest((lm / 2 - win // 2).cast("int"), F.lit(1)),
+        F.greatest((lm - (win - 1)).cast("int"), F.lit(1)),
+    )
+    return [(F.substring(ta, p, F.lit(win)), F.substring(tb, p, F.lit(win))) for p in starts]
 
 
 # ---------------------------------------------------------------------------
@@ -178,7 +258,6 @@ def merge_clusters_vector(
     records: DataFrame,
     cluster_col: str = "cluster",
     centroid_cosine_floor: float = 0.80,
-    top_slots: int = 4,
 ) -> DataFrame:
     """Merge clusters whose centroids are near-parallel. Candidates
     share a top-weight hashed-TFIDF slot (deterministic prefilter,
@@ -187,25 +266,15 @@ def merge_clusters_vector(
     = min cluster id (largest-wins determinism is subsumed because ids
     are min member ids)."""
     prof = eager_cut(cluster_profiles(records, cluster_col))
-    keyed = _drop_hot_keys(
-        prof.select(
-            F.col(cluster_col).alias("c"), "c_idx", "c_val",
-            F.explode(_top_slot_keys(F.col("c_idx"), F.col("c_val"), top_slots)).alias("k"),
-        ),
-        "k",
-        SLOT_KEY_CAP,
+    cand = _slot_candidates(
+        prof.select(F.col(cluster_col).alias("cb"), "c_idx", "c_val"),
+        ["ca", "cb"],
+        pair_filter=F.col("ca") < F.col("cb"),
     )
-    a = keyed.select(F.col("k"), F.col("c").alias("ca"), F.col("c_idx").alias("ia"), F.col("c_val").alias("va"))
-    b = keyed.select(F.col("k"), F.col("c").alias("cb"), F.col("c_idx").alias("ib"), F.col("c_val").alias("vb"))
-    cand = (
-        a.join(b, "k")
-        .where(F.col("ca") < F.col("cb"))
-        .dropDuplicates(["ca", "cb"])
-        .withColumn("cos", sparse_cosine_udf(F.col("ia"), F.col("va"), F.col("ib"), F.col("vb")))
-        .where(F.col("cos") >= centroid_cosine_floor)
-        .select(F.col("ca").alias("src"), F.col("cb").alias("dst"))
+    edges = cand.where(F.col("cos") >= centroid_cosine_floor).select(
+        F.col("ca").alias("src"), F.col("cb").alias("dst")
     )
-    return _apply_merge(records, cand, cluster_col)
+    return merge_through_components(records, edges, cluster_col)
 
 
 # ---------------------------------------------------------------------------
@@ -264,8 +333,6 @@ def merge_clusters_string(
     Windows (not full strings) keep the DP bounded: canonicals are
     multi-KB and lev is O(len^2) per pair — the cost argument of
     ScoringConfig.lev_prefix_chars."""
-    from entity_resolver_spark.operators.canonical import canonical_by_frequency
-
     canon = eager_cut(canonical_by_frequency(records, cluster_col))
     prefix_keys = canon.select(
         cluster_col,
@@ -290,25 +357,16 @@ def merge_clusters_string(
         .where(F.col("__rk") <= 3)
         .select(cluster_col, F.concat(F.lit("t:"), F.col("token")).alias("k"))
     )
-    win = STRING_SIM_PREFIX
     keyed = _drop_hot_keys(
         prefix_keys.unionByName(rare_keys), "k", STRING_KEY_CAP
-    ).join(
-        canon.select(
-            cluster_col,
-            F.substring("canonical_text", 1, MERGE_TEXT_CAP).alias("__txt"),
-            F.length("canonical_text").alias("__len"),
-            F.xxhash64("canonical_text").alias("__fh"),
-        ),
-        cluster_col,
-    )
+    ).join(canon.select(cluster_col, *_text_key("canonical_text", "__")), cluster_col)
     a = keyed.select(
         F.col("k"), F.col(cluster_col).alias("ca"),
-        F.col("__txt").alias("ta"), F.col("__len").alias("la"), F.col("__fh").alias("fa"),
+        F.col("__txt").alias("ta"), F.col("__len").alias("la"), F.col("__h").alias("fa"),
     )
     b = keyed.select(
         F.col("k"), F.col(cluster_col).alias("cb"),
-        F.col("__txt").alias("tb"), F.col("__len").alias("lb"), F.col("__fh").alias("fb"),
+        F.col("__txt").alias("tb"), F.col("__len").alias("lb"), F.col("__h").alias("fb"),
     )
     # two consumers read pairs0 (the fast path and the window chain) —
     # materialize once or the key join + dedup executes per branch
@@ -321,28 +379,17 @@ def merge_clusters_string(
     # collisions at cluster counts are ~n^2/2^64 — negligible)
     fast = pairs0.where(F.col("fa") == F.col("fb")).select("ca", "cb")
 
-    # aligned window offsets (1-based), clamped to the carried text cap
-    lm = F.least(F.col("la"), F.col("lb"), F.lit(MERGE_TEXT_CAP))
-    mid_pos = F.greatest((lm / 2 - win // 2).cast("int"), F.lit(1))
-    tail_pos = F.greatest((lm - (win - 1)).cast("int"), F.lit(1))
-
-    def _passes(pos) -> "F.Column":
-        wa = F.substring(F.col("ta"), pos, F.lit(win))
-        wb = F.substring(F.col("tb"), pos, F.lit(win))
-        return (jw_expr(wa, wb) >= jw_floor) & (lev_sim_expr(wa, wb) >= lev_floor)
-
     rest = (
         pairs0.where(F.col("fa") != F.col("fb"))
-        # admission gates first — pure codegen, prune before any kernel
+        # admission gate first — pure codegen, prune before any kernel
         .where(
             F.least(F.col("la"), F.col("lb"))
             >= len_ratio_floor * F.greatest(F.col("la"), F.col("lb"))
         )
-        .where(_passes(F.lit(1)))
-        .where(_passes(mid_pos))
-        .where(_passes(tail_pos))
-        .select("ca", "cb")
     )
+    for wa, wb in _aligned_windows(F.col("ta"), F.col("la"), F.col("tb"), F.col("lb")):
+        rest = rest.where((jw_expr(wa, wb) >= jw_floor) & (lev_sim_expr(wa, wb) >= lev_floor))
+    rest = rest.select("ca", "cb")
 
     if cosine_co_floor is not None and "vec_idx" in records.columns:
         # centroid cosine co-gate: built ONLY for clusters that survived
@@ -388,26 +435,7 @@ def merge_clusters_string(
     cand = fast.unionByName(rest).select(
         F.col("ca").alias("src"), F.col("cb").alias("dst")
     )
-    return _apply_merge(records, cand, cluster_col)
-
-
-def _apply_merge(records: DataFrame, merge_edges: DataFrame, cluster_col: str) -> DataFrame:
-    # materialize the candidate edges ONCE: isEmpty() would execute the
-    # (expensive) candidate-scoring plan and throw the result away, then
-    # connected_components' own input checkpoint would execute it AGAIN
-    # (measured 103s of pure double-compute at 3k clusters)
-    merge_edges, n_edges = counted_cut(merge_edges.select("src", "dst"))
-    if n_edges == 0:
-        return records
-    labels = connected_components(merge_edges)
-    remap, n_remap = counted_cut(
-        labels.withColumnRenamed("node", cluster_col).withColumnRenamed("component", "__m")
-    )
-    return (
-        records.join(_maybe_broadcast(remap, n_remap, MAP_BROADCAST_CAP), cluster_col, "left")
-        .withColumn(cluster_col, F.coalesce(F.col("__m"), F.col(cluster_col)))
-        .drop("__m")
-    )
+    return merge_through_components(records, cand, cluster_col)
 
 
 # ---------------------------------------------------------------------------
@@ -436,16 +464,9 @@ def _string_evidence_veto(
     jw >= 0.923. The mid/tail LEV windows are what keep the round-4
     shared-boilerplate hard negatives evicted (divergent middles score
     low lev); demanding jw there would only refuse true family members."""
-    from entity_resolver_spark.operators.canonical import canonical_by_frequency
-
-    win = STRING_SIM_PREFIX
     suspects, n_susp = counted_cut(
         flagged.where(F.col("__evict")).select(
-            "conv_id",
-            F.col(cluster_col).alias("__vc"),
-            F.substring("norm_text", 1, MERGE_TEXT_CAP).alias("__stxt"),
-            F.length("norm_text").alias("__slen"),
-            F.xxhash64("norm_text").alias("__sh"),
+            "conv_id", F.col(cluster_col).alias("__vc"), *_text_key("norm_text", "__s")
         )
     )
     if n_susp == 0:
@@ -454,42 +475,23 @@ def _string_evidence_veto(
     canon, n_canon = counted_cut(
         canonical_by_frequency(
             records.join(cids, cluster_col, "left_semi"), cluster_col
-        ).select(
-            F.col(cluster_col).alias("__vc"),
-            F.substring("canonical_text", 1, MERGE_TEXT_CAP).alias("__ctxt"),
-            F.length("canonical_text").alias("__clen"),
-            F.xxhash64("canonical_text").alias("__ch"),
-        )
+        ).select(F.col(cluster_col).alias("__vc"), *_text_key("canonical_text", "__c"))
     )
     j = suspects.join(
         _maybe_broadcast(canon, n_canon, PROFILE_BROADCAST_CAP), "__vc"
     )
-    lm = F.least(F.col("__slen"), F.col("__clen"), F.lit(MERGE_TEXT_CAP))
-    mid_pos = F.greatest((lm / 2 - win // 2).cast("int"), F.lit(1))
-    tail_pos = F.greatest((lm - (win - 1)).cast("int"), F.lit(1))
-
-    def _lev_ok(pos) -> "F.Column":
-        wa = F.substring(F.col("__stxt"), pos, F.lit(win))
-        wb = F.substring(F.col("__ctxt"), pos, F.lit(win))
-        return lev_sim_expr(wa, wb) >= lev_floor
-
-    head_jw = jw_expr(
-        F.substring(F.col("__stxt"), 1, win), F.substring(F.col("__ctxt"), 1, win)
+    windows = _aligned_windows(
+        F.col("__stxt"), F.col("__slen"), F.col("__ctxt"), F.col("__clen")
     )
+    near = (
+        F.least("__slen", "__clen") >= len_ratio_floor * F.greatest("__slen", "__clen")
+    ) & (jw_expr(*windows[0]) >= jw_floor)
+    for wa, wb in windows:
+        near = near & (lev_sim_expr(wa, wb) >= lev_floor)
     veto, n_veto = counted_cut(
-        j.where(
-            (F.col("__sh") == F.col("__ch"))
-            | (
-                (
-                    F.least("__slen", "__clen")
-                    >= len_ratio_floor * F.greatest("__slen", "__clen")
-                )
-                & (head_jw >= jw_floor)
-                & _lev_ok(F.lit(1))
-                & _lev_ok(mid_pos)
-                & _lev_ok(tail_pos)
-            )
-        ).select("conv_id", F.lit(True).alias("__veto"))
+        j.where((F.col("__sh") == F.col("__ch")) | near).select(
+            "conv_id", F.lit(True).alias("__veto")
+        )
     )
     if n_veto == 0:
         return flagged
@@ -592,29 +594,15 @@ def evict_outliers(
     suspects = voted.where(F.col("__v1") | F.col("__v2")).select(
         "conv_id", cluster_col, "vec_idx", "vec_val", "__cos"
     )
-    pkeys = _drop_hot_keys(
-        prof.select(
-            F.col(cluster_col).alias("__alt_cluster"), F.col("c_idx").alias("a_idx"),
-            F.col("c_val").alias("a_val"),
-            F.explode(_top_slot_keys(F.col("c_idx"), F.col("c_val"), 4)).alias("k"),
-        ),
-        "k",
-        SLOT_KEY_CAP,
-    )
-    skeys = suspects.select(
-        "conv_id", cluster_col, "vec_idx", "vec_val",
-        F.explode(_top_slot_keys(F.col("vec_idx"), F.col("vec_val"), 4)).alias("k"),
-    )
     alt_best = (
-        skeys.join(pkeys, "k")
-        .where(F.col(cluster_col) != F.col("__alt_cluster"))
-        .dropDuplicates(["conv_id", "__alt_cluster"])
-        .withColumn(
-            "__alt_cos",
-            sparse_cosine_udf(F.col("vec_idx"), F.col("vec_val"), F.col("a_idx"), F.col("a_val")),
+        _slot_candidates(
+            prof.select(F.col(cluster_col).alias("__alt_cluster"), "c_idx", "c_val"),
+            ["conv_id", "__alt_cluster"],
+            probe=suspects,
+            pair_filter=F.col(cluster_col) != F.col("__alt_cluster"),
         )
         .groupBy("conv_id")
-        .agg(F.max("__alt_cos").alias("__alt_cos"))
+        .agg(F.max("cos").alias("__alt_cos"))
     )
     v3 = suspects.join(alt_best, "conv_id", "left").select(
         "conv_id",
@@ -714,7 +702,7 @@ def reassign_singletons(
     if counts["n_single"] == 0 or counts["n_multi"] == 0:
         return records
     rec = records.join(_maybe_broadcast(sizes, n_sizes, MAP_BROADCAST_CAP), cluster_col)
-    singles = rec.where(F.col("__n") == 1).select("conv_id", "vec_idx", "vec_val", cluster_col)
+    singles = rec.where(F.col("__n") == 1).select("conv_id", "vec_idx", "vec_val")
     multi = rec.where(F.col("__n") > 1)
 
     prof, n_prof = counted_cut(cluster_profiles(multi, cluster_col))
@@ -735,26 +723,13 @@ def reassign_singletons(
         .agg(F.avg("__mc").alias("avg_member_cos"))
     )
     prof = prof.join(member_q, cluster_col)
-    pkeys = _drop_hot_keys(
+    scored = _slot_candidates(
         prof.select(
             F.col(cluster_col).alias("cand_cluster"), "c_idx", "c_val", "size",
             "avg_member_cos",
-            F.explode(_top_slot_keys(F.col("c_idx"), F.col("c_val"), 4)).alias("k"),
         ),
-        "k",
-        SLOT_KEY_CAP,
-    )
-    skeys = singles.select(
-        "conv_id", "vec_idx", "vec_val",
-        F.explode(_top_slot_keys(F.col("vec_idx"), F.col("vec_val"), 4)).alias("k"),
-    )
-    scored = (
-        skeys.join(pkeys, "k")
-        .dropDuplicates(["conv_id", "cand_cluster"])
-        .withColumn(
-            "cos",
-            sparse_cosine_udf(F.col("vec_idx"), F.col("vec_val"), F.col("c_idx"), F.col("c_val")),
-        )
+        ["conv_id", "cand_cluster"],
+        probe=singles,
     )
     # soft threshold penalty (validator.py:1390-1410): below-floor
     # similarity is reduced, not zeroed

@@ -18,7 +18,7 @@ from pyspark.sql import Window as W
 
 from entity_resolver_spark.lineage import counted_cut
 from entity_resolver_spark.operators.collapse import TURN_SEP
-from entity_resolver_spark.operators.components import connected_components
+from entity_resolver_spark.operators.components import merge_through_components
 
 
 def q1_violations(records: DataFrame, key_col: str = "norm_text", cluster_col: str = "cluster") -> DataFrame:
@@ -33,8 +33,8 @@ def q1_violations(records: DataFrame, key_col: str = "norm_text", cluster_col: s
 
 def consolidate_identical(records: DataFrame, key_col: str = "norm_text", cluster_col: str = "cluster") -> DataFrame:
     """G11: clusters sharing an identical key are merged — build
-    cluster-cluster edges through shared keys, run components on the
-    (small) cluster graph, relabel with the min cluster id.
+    cluster-cluster edges through shared keys and merge them with
+    components.merge_through_components (min cluster id wins).
 
     The cluster graph is orders of magnitude smaller than the record
     table, so the iterative step runs on a tiny DataFrame regardless of
@@ -42,22 +42,8 @@ def consolidate_identical(records: DataFrame, key_col: str = "norm_text", cluste
     key_clusters = records.select(key_col, cluster_col).distinct()
     a = key_clusters.select(F.col(key_col).alias("k"), F.col(cluster_col).alias("src"))
     b = key_clusters.select(F.col(key_col).alias("k"), F.col(cluster_col).alias("dst"))
-    # the job that materializes the edges also answers "any?" — an
-    # isEmpty() probe would run the records plan once for the answer
-    # and again for the components input
-    edges, n_edges = counted_cut(
-        a.join(b, "k").where(F.col("src") < F.col("dst")).select("src", "dst").distinct()
-    )
-    if n_edges == 0:
-        return records
-    labels = connected_components(edges)
-    remap = labels.withColumnRenamed("node", cluster_col).withColumnRenamed(
-        "component", "__new_cluster"
-    )
-    return (
-        records.join(remap, cluster_col, "left")
-        .withColumn(cluster_col, F.coalesce(F.col("__new_cluster"), F.col(cluster_col)))
-        .drop("__new_cluster")
+    return merge_through_components(
+        records, a.join(b, "k").where(F.col("src") < F.col("dst")), cluster_col
     )
 
 

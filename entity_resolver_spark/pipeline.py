@@ -43,7 +43,6 @@ from entity_resolver_spark.operators.validate import (
     split_on_metadata,
 )
 from entity_resolver_spark.operators.vectorize import add_tfidf_vectors, token_df
-from entity_resolver_spark.lineage import eager_cut, release_checkpoint
 
 
 class EntityResolverPipeline:
@@ -174,40 +173,11 @@ class EntityResolverPipeline:
         )
 
         def _clustered() -> DataFrame:
-            # per-pass wall timing: each pass ends in an eager_cut
-            # materialization, so segment walls are real execution time.
-            # Recorded as clustered.<pass> rows so scale regressions
-            # point at the pass, not just the stage (the 80k-family
-            # linear-ladder run showed the stage superlinear with no
-            # way to see which pass).
-            import time as _time
-
-            _t = [_time.time()]
-
-            _prev = [None]
-
-            def _mark(name: str, cur: DataFrame | None = None) -> None:
-                now = _time.time()
-                ckpt.metrics.append(
-                    {
-                        "stage": f"clustered.{name}",
-                        "rows": -1,
-                        "seconds": round(now - _t[0], 3),
-                        "resumed": False,
-                    }
-                )
-                _t[0] = now
-                # the out-chain is strictly linear and `cur` is already
-                # materialized, so the superseded generation's
-                # localCheckpoint blocks can be freed — without this the
-                # chain holds one records-sized generation per pass and
-                # late stages pay storage eviction (lineage.py
-                # release_checkpoint docstring has the measurements)
-                if cur is not None:
-                    if _prev[0] is not None and _prev[0] is not cur:
-                        release_checkpoint(_prev[0])
-                    _prev[0] = cur
-
+            # every pass ends in ckpt.cut_pass: a clustered.<pass> metrics
+            # row with its rows and wall, so scale regressions point at
+            # the pass, not just the stage (the 80k-family linear-ladder
+            # run showed the stage superlinear with no way to see which
+            # pass), and the superseded generation is released.
             # refinement passes need the vectors; reference order
             # (resolver.py:438-466): evict/reassign, then merge passes,
             # then splits and identical-key consolidation. Every pass
@@ -216,10 +186,9 @@ class EntityResolverPipeline:
             # the upstream plan recomputes once per reference and the
             # stage goes combinatorial (measured 243s vs ~20s at 48k
             # records).
-            out = attach_labels(
-                vectorized.drop("vec_blob"), labels
-            ).transform(eager_cut)
-            _mark("attach_labels", out)
+            out = ckpt.cut_pass(
+                "attach_labels", attach_labels(vectorized.drop("vec_blob"), labels)
+            )
             # G4/G8: break single-edge bridges inside large components
             # BEFORE the refinement passes (reference order — Louvain/
             # ensemble run as part of clustering, resolver.py:432-436,
@@ -229,15 +198,14 @@ class EntityResolverPipeline:
             if cfg.clustering.break_bridges:
                 from entity_resolver_spark.operators.communities import break_bridges
 
-                out = break_bridges(
+                out = ckpt.cut_pass("break_bridges", break_bridges(
                     out,
                     edges,
                     min_component=cfg.clustering.bridge_min_component,
                     max_iter=cfg.clustering.bridge_max_iter,
                     min_community=cfg.clustering.bridge_min_community,
                     density_floor=cfg.clustering.bridge_density_floor,
-                ).transform(eager_cut)
-                _mark("break_bridges", out)
+                ))
             ref = cfg.refinement
             # G9 vector merge runs FIRST among the refinement passes,
             # immediately after bridge-breaking: LPA (deliberately) may
@@ -253,12 +221,11 @@ class EntityResolverPipeline:
             # neither creates new near-parallel cluster pairs — one
             # merge pass up front is sufficient.
             if ref.merge_vector:
-                out = merge_clusters_vector(
+                out = ckpt.cut_pass("merge_vector", merge_clusters_vector(
                     out, centroid_cosine_floor=ref.merge_centroid_cosine_floor
-                ).transform(eager_cut)
-                _mark("merge_vector", out)
+                ))
             if ref.evict_outliers:
-                out = evict_outliers(
+                out = ckpt.cut_pass("evict_outliers", evict_outliers(
                     out,
                     min_cluster_size=ref.evict_min_cluster_size,
                     z_floor=ref.evict_z_floor,
@@ -269,10 +236,9 @@ class EntityResolverPipeline:
                     veto_jw_floor=ref.evict_veto_jw_floor,
                     veto_lev_floor=ref.evict_veto_lev_floor,
                     veto_len_ratio_floor=ref.merge_len_ratio_floor,
-                ).drop("evicted").transform(eager_cut)
-                _mark("evict_outliers", out)
+                ).drop("evicted"))
             if ref.reassign_singletons:
-                out = reassign_singletons(
+                out = ckpt.cut_pass("reassign_singletons", reassign_singletons(
                     out,
                     assign_floor=ref.assign_floor,
                     ratio_floor=ref.assign_ratio_floor,
@@ -282,8 +248,7 @@ class EntityResolverPipeline:
                     soft_penalty=ref.assign_soft_penalty,
                     min_viable=ref.assign_min_viable,
                     score_margin=ref.assign_score_margin,
-                ).transform(eager_cut)
-                _mark("reassign_singletons", out)
+                ))
             if ref.merge_string:
                 out = merge_clusters_string(
                     out,
@@ -299,8 +264,7 @@ class EntityResolverPipeline:
             # every reference re-executes the merge-pass plan (measured
             # ~25s of pure recompute in the clustered stage at 129k
             # turns with the metadata splits on)
-            out = out.drop("vec_idx", "vec_val").transform(eager_cut)
-            _mark("merge_string", out)
+            out = ckpt.cut_pass("merge_string", out.drop("vec_idx", "vec_val"))
             out = split_on_metadata(
                 out,
                 tool_conflict=cfg.validation.split_on_tool_conflict,
@@ -308,8 +272,7 @@ class EntityResolverPipeline:
             )
             if cfg.validation.enforce_unique_entity:
                 out = consolidate_identical(out)
-            _mark("splits_consolidate")
-            return out
+            return ckpt.cut_pass("splits_consolidate", out)
 
         clustered = ckpt.stage("clustered", _clustered)
 
@@ -320,22 +283,6 @@ class EntityResolverPipeline:
         )
 
         def _final() -> DataFrame:
-            import time as _time
-
-            _t = [_time.time()]
-
-            def _mark(name: str) -> None:
-                now = _time.time()
-                ckpt.metrics.append(
-                    {
-                        "stage": f"resolved.{name}",
-                        "rows": -1,
-                        "seconds": round(now - _t[0], 3),
-                        "resumed": False,
-                    }
-                )
-                _t[0] = now
-
             with_canon = apply_canonical_map(clustered, canon)
             if cfg.validation.enforce_unique_entity:
                 # Q2 repair + gate (reference resolver.py:475): two
@@ -346,8 +293,7 @@ class EntityResolverPipeline:
             # full text payload — cut once here or each consumer re-runs
             # the canonical-map + FD-repair joins over the fat rows
             # (measured 85s of re-compute at 96k conversations)
-            with_canon = with_canon.transform(eager_cut)
-            _mark("canonical_map_fd")
+            with_canon = ckpt.cut_pass("canonical_map_fd", with_canon)
             if cfg.refinement.enrich_metadata:
                 with_canon = enrich_metadata(with_canon)
             else:
@@ -364,8 +310,8 @@ class EntityResolverPipeline:
             )
             stats = cluster_edge_stats(edges, final_labels)
             out = score_confidence(with_canon, stats, cfg.confidence)
-            # (no further _mark: enrichment+confidence execute when the
-            # stage materializes — their wall is the resolved total
+            # (no further pass cut: enrichment+confidence execute when
+            # the stage materializes — their wall is the resolved total
             # minus resolved.canonical_map_fd)
             return out.select(
                 "conv_id", "cluster", "norm_text", "canonical_text", "n_turns",

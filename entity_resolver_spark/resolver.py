@@ -110,11 +110,12 @@ class SparkEntityResolver:
 
     # config keys that existed in older save formats but were removed;
     # load() strips them instead of letting extra='forbid' fail with an
-    # opaque pydantic error on a format-1 save dir
+    # opaque pydantic error on an older save dir
     _REMOVED_CONFIG_KEYS: dict[int, tuple[str, ...]] = {
         1: ("random_seed", "suffix_passes"),
+        2: ("columns", "lowercase", "strip_punctuation", "collapse_whitespace"),
     }
-    _SAVE_FORMAT = 2
+    _SAVE_FORMAT = 3
 
     @classmethod
     def load(cls, spark: SparkSession, path: str) -> "SparkEntityResolver":

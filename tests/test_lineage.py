@@ -142,7 +142,7 @@ def test_release_checkpoint_frees_blocks_and_successor_survives(spark):
     gen1_ids = _persisted_rdd_ids(spark) - before
     assert gen1_ids, "eager_cut did not persist any blocks"
     # successor materializes BEFORE the predecessor is released — the
-    # exact contract the pipeline's _mark() follows
+    # exact contract CheckpointManager.cut_pass follows
     gen2 = eager_cut(gen1.groupBy("v").count())
     release_checkpoint(gen1)
     deadline = _t.time() + 20

@@ -134,8 +134,10 @@ def test_stage_metrics_recorded(resolved):
         "resolved",
     ]
     assert all(m["rows"] >= 0 for m in pipe.metrics if "." not in m["stage"])
-    # clustered sub-pass walls are recorded (rows deliberately -1: no
-    # extra count job per pass)
+    # every pass cut records its rows (counted by the job that fills
+    # the cut) and wall
+    passes = [m for m in pipe.metrics if "." in m["stage"]]
+    assert passes and all(m["rows"] >= 0 for m in passes)
     subs = [m["stage"] for m in pipe.metrics if m["stage"].startswith("clustered.")]
     assert "clustered.attach_labels" in subs
     assert "clustered.splits_consolidate" in subs

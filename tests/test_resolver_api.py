@@ -89,8 +89,8 @@ def test_report_distributional_stats(fitted):
 
 
 def test_load_migrates_format1_config(fitted, spark, tmp_path):
-    """A format-1 save dir carrying since-removed config keys loads
-    cleanly (keys stripped); an unknown future format raises a clear
+    """A format-1 save dir carrying since-removed config keys (format 1's
+    and format 2's) loads cleanly (keys stripped); an unknown future format raises a clear
     error instead of an opaque pydantic one."""
     import json
     import os
@@ -106,6 +106,9 @@ def test_load_migrates_format1_config(fitted, spark, tmp_path):
         data = yaml.safe_load(f)
     data["random_seed"] = 42
     data["normalization"]["suffix_passes"] = 3
+    data["columns"] = {"conv_id": "conv_id", "text": "text"}
+    for knob in ("lowercase", "strip_punctuation", "collapse_whitespace"):
+        data["normalization"][knob] = True
     with open(cfg_path, "w") as f:
         yaml.safe_dump(data, f)
     with open(os.path.join(path, "manifest.json"), "w") as f:

@@ -63,6 +63,30 @@ def test_lev_sim_matches_reference_formula(spark):
         assert abs(r["s"] - expect) < 1e-12
 
 
+def test_canonical_lev_matrix_matches_reference():
+    """canonical._lev_matrix (one C-kernel call over a group's i<j
+    pairs) equals the pure-Python reference on seeded random strings up
+    to the canonical gate's LEV_MAX_CHARS codepoints, non-BMP ones
+    included."""
+    import random
+
+    import numpy as np
+
+    from entity_resolver_spark.operators.canonical import LEV_MAX_CHARS, _lev_matrix
+
+    rng = random.Random(11)
+    alphabet = "abcab xyz\u00e9\u4e2d\U0001f600\U0001f603"
+    for _ in range(8):
+        strings = [
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(0, LEV_MAX_CHARS)))
+            for _ in range(rng.randint(2, 12))
+        ]
+        strings.append(strings[0][: LEV_MAX_CHARS // 2] + "\U0001f600" * 3)
+        got = _lev_matrix(strings)
+        want = np.array([[_lev(a, b) for b in strings] for a in strings], dtype=np.float64)
+        assert np.array_equal(got, want)
+
+
 @pytest.mark.parametrize("a,b", PAIRS)
 def test_jaro_winkler_matches_duckdb(a, b):
     if not (a.isascii() and b.isascii()):

@@ -29,6 +29,19 @@ def test_consolidate_identical_merges_and_clears_q1(spark):
     assert got["k1"] == got["k2"] == "c1"  # min cluster id wins (deterministic)
     assert got["k3"] == "c9"
 
+    # a chain: c1-c2 share key a, c2-c3 share key b -> all end on c1
+    chain = spark.createDataFrame(
+        [("a", "c1"), ("a", "c2"), ("b", "c2"), ("b", "c3"), ("z", "c4")],
+        "norm_text string, cluster string",
+    )
+    got = sorted((r["norm_text"], r["cluster"]) for r in consolidate_identical(chain).collect())
+    assert got == [("a", "c1"), ("a", "c1"), ("b", "c1"), ("b", "c1"), ("z", "c4")]
+
+    # no shared key: the input frame itself comes back (no components
+    # call, no relabel join)
+    solo = chain.where(F.col("cluster") != "c2")
+    assert consolidate_identical(solo) is solo
+
 
 def test_q2_functional_dependency(spark):
     df = spark.createDataFrame(
