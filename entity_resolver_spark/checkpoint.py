@@ -13,7 +13,13 @@ for the canonical map, persistence.py:141-144).
 Resume contract: a stage re-runs iff (a) no manifest, or (b) the
 config+input fingerprint changed. Metrics rows accumulate in
 <dir>/_metrics.jsonl — the per-stage lineage record (stage, rows,
-match counts, wall seconds, fingerprint).
+match counts, wall seconds, fingerprint, codegen compiles).
+
+`codegen_compiles` on every row is how many classes the driver JVM's
+Janino compiled over the row's wall (Spark's CodegenMetrics; in local
+mode that includes the tasks' whole-stage code). A session whose
+generated-class cache holds the working set compiles a repeated resolve
+in a handful; a stage that reads hundreds is recompiling its plans.
 """
 
 from __future__ import annotations
@@ -26,6 +32,19 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from entity_resolver_spark.lineage import counted_cut, release_checkpoint
+
+
+def codegen_compiles(spark: SparkSession) -> int | None:
+    """Janino compiles so far in the driver JVM, or None without a JVM
+    handle (Spark Connect) or where CodegenMetrics moved."""
+    jvm = getattr(spark, "_jvm", None)
+    if jvm is None:
+        return None  # Spark Connect: no JVM handles on the driver
+    try:
+        cm = jvm.org.apache.spark.metrics.source.CodegenMetrics
+        return int(cm.METRIC_COMPILATION_TIME().getCount())
+    except Exception:  # any JVM-side signature drift
+        return None
 
 
 class CheckpointManager:
@@ -67,14 +86,15 @@ class CheckpointManager:
         job that fills the checkpoint also counts its rows. A compute
         that ends in `cut_pass` is not cut a second time."""
         t0 = time.time()
-        self._pass = {"stage": name, "t": t0, "cut": None, "rows": None}
+        c0 = codegen_compiles(self.spark)
+        self._pass = {"stage": name, "t": t0, "c": c0, "cut": None, "rows": None}
         if self.base_dir is None:
             df = compute()
             if df is self._pass["cut"]:
                 rows = self._pass["rows"]
             else:
                 df, rows = counted_cut(df)
-            self._record(name, df, t0, resumed=False, extra=extra_metrics, rows=rows)
+            self._record(name, df, t0, c0, resumed=False, extra=extra_metrics, rows=rows)
             return df
 
         data_dir, manifest_path = self._paths(name)
@@ -83,7 +103,7 @@ class CheckpointManager:
                 manifest = json.load(f)
             if manifest.get("fingerprint") == self.run_fingerprint:
                 df = self.spark.read.parquet(data_dir)
-                self._record(name, df, t0, resumed=True, extra=None,
+                self._record(name, df, t0, c0, resumed=True, extra=None,
                              rows=manifest.get("rows"))
                 return df
 
@@ -101,13 +121,14 @@ class CheckpointManager:
                  "written_at": time.time()},
                 f,
             )
-        self._record(name, df, t0, resumed=False, extra=extra_metrics, rows=rows)
+        self._record(name, df, t0, c0, resumed=False, extra=extra_metrics, rows=rows)
         return df
 
     def cut_pass(self, name: str, df: DataFrame) -> DataFrame:
         """Materialize one pass inside the running stage's compute and
         record it as a `<stage>.<name>` metrics row: rows from the job
-        that fills the cut, seconds since the stage's previous pass.
+        that fills the cut, seconds and codegen compiles since the
+        stage's previous pass.
 
         The stage's pass chain is linear, so once the new generation is
         materialized the one it supersedes is released — otherwise a
@@ -123,23 +144,25 @@ class CheckpointManager:
             df, rows = counted_cut(df)
             if p["cut"] is not None:
                 release_checkpoint(p["cut"])
-        now = time.time()
+        now, c = time.time(), codegen_compiles(self.spark)
         self.metrics.append(
             {
                 "stage": f"{p['stage']}.{name}",
                 "rows": rows,
                 "seconds": round(now - p["t"], 3),
+                "codegen_compiles": _delta(p["c"], c),
                 "resumed": False,
             }
         )
-        p.update(t=now, cut=df, rows=rows)
+        p.update(t=now, c=c, cut=df, rows=rows)
         return df
 
-    def _record(self, name, df, t0, resumed, extra, rows=None):
+    def _record(self, name, df, t0, c0, resumed, extra, rows=None):
         m = {
             "stage": name,
             "rows": rows if rows is not None else df.count(),
             "seconds": round(time.time() - t0, 3),
+            "codegen_compiles": _delta(c0, codegen_compiles(self.spark)),
             "resumed": resumed,
             "fingerprint": self.run_fingerprint,
         }
@@ -149,3 +172,7 @@ class CheckpointManager:
         if self.base_dir:
             with open(os.path.join(self.base_dir, "_metrics.jsonl"), "a") as f:
                 f.write(json.dumps(m) + "\n")
+
+
+def _delta(c0: int | None, c1: int | None) -> int | None:
+    return None if c0 is None or c1 is None else c1 - c0

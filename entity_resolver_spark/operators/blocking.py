@@ -232,8 +232,10 @@ def candidate_pairs(
     cfg: BlockingConfig,
     tokens_col: str = "match_tokens",
     df_table: DataFrame | None = None,
+    n_records: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """-> (pairs(conv_a, conv_b, n_shared_keys), block_metrics).
+    `n_records` is `records.count()` when the caller already knows it.
 
     block_metrics(block_key, block_size, status in {'ok','salted','stop'})
     is the per-stage lineage the north rule asks for. 'salted' blocks
@@ -246,7 +248,8 @@ def candidate_pairs(
     # plan executes twice. The table is tiny: ~keys_per_record rows of
     # (conv_id, block_key).
     keys = blocking_keys(records, cfg, tokens_col, df_table=df_table).transform(eager_cut)
-    n_records = records.count()
+    if n_records is None:
+        n_records = records.count()
     stop_n = max(int(cfg.stop_key_fraction * n_records), cfg.max_block_size)
 
     sizes = keys.groupBy("block_key").agg(F.count("*").alias("block_size"))

@@ -40,10 +40,14 @@ def token_df(records: DataFrame, tokens_col: str = "tokens") -> DataFrame:
 
 
 def idf_table(
-    records: DataFrame, tokens_col: str = "tokens", df_table: DataFrame | None = None
+    records: DataFrame,
+    tokens_col: str = "tokens",
+    df_table: DataFrame | None = None,
+    n_records: int | None = None,
 ) -> DataFrame:
-    """(token, df, idf) with smooth idf = ln((N+1)/(df+1)) + 1."""
-    n = records.count()
+    """(token, df, idf) with smooth idf = ln((N+1)/(df+1)) + 1, where N
+    is `n_records` or else `records.count()`."""
+    n = records.count() if n_records is None else n_records
     if df_table is None:
         df_table = token_df(records, tokens_col)
     return df_table.withColumn(
@@ -129,15 +133,17 @@ def add_tfidf_vectors(
     df_table: DataFrame | None = None,
     top_k: int | None = 128,
     idf: DataFrame | None = None,
+    n_records: int | None = None,
 ) -> DataFrame:
     """Join hashed TF-IDF sparse vectors back onto the record table.
 
     Pass `idf` to vectorize against a FITTED weight table (the
     transform/predict path — both sides of a comparison must share one
     IDF space); otherwise weights derive from `records` (and
-    `df_table` if the document frequencies were already computed)."""
+    `df_table` if the document frequencies were already computed, and
+    `n_records` if its row count is known)."""
     if idf is None:
-        idf = idf_table(records, tokens_col, df_table=df_table)
+        idf = idf_table(records, tokens_col, df_table=df_table, n_records=n_records)
     vec = hashed_tfidf(records, idf, id_col, tokens_col, num_features, top_k=top_k)
     return records.join(vec, id_col, "left")
 

@@ -93,6 +93,9 @@ class EntityResolverPipeline:
                 nfkc=cfg.normalization.nfkc,
             ).drop("doc"),
         )
+        # blocking's stop-key threshold and the IDF weights both need
+        # the record count: the stage's own row count, not a new job
+        n_records = ckpt.metrics[-1]["rows"]
 
         # (token, df) over match_tokens feeds BOTH the rare-token
         # blocking channel and the IDF weights — one explode+agg pass,
@@ -109,18 +112,27 @@ class EntityResolverPipeline:
         if ckpt.metrics[-1]["rows"] < 2_000_000:
             token_stats = F.broadcast(token_stats)
 
+        blocks: dict[str, int] = {}
+
         def _pairs() -> DataFrame:
             pairs, block_metrics = candidate_pairs(
                 normalized, cfg.blocking, tokens_col="match_tokens",
-                df_table=token_stats,
+                df_table=token_stats, n_records=n_records,
             )
-            self._block_metrics = {
-                r["status"]: r["n"]
-                for r in block_metrics.groupBy("status").agg(F.count("*").alias("n")).collect()
-            }
+            blocks.update(
+                block_metrics.groupBy("status").agg(F.count("*")).collect()
+            )
             return pairs
 
-        pairs = ckpt.stage("pairs", _pairs)
+        # skew handling on the pairs row: blocks kept whole, split into
+        # salted sub-blocks, and dropped as stop keys
+        pairs = ckpt.stage(
+            "pairs",
+            _pairs,
+            extra_metrics=lambda df, rows: {
+                f"blocks_{s}": blocks.get(s, 0) for s in ("ok", "salted", "stop")
+            },
+        )
 
         # min-df floor on the vectorizer's weight table only (blocking's
         # rare channel has its own df>=2 floor)
@@ -137,6 +149,7 @@ class EntityResolverPipeline:
                 num_features=cfg.scoring.tfidf_num_features,
                 df_table=vec_df_table,
                 top_k=cfg.scoring.vector_top_k,
+                n_records=n_records,
             ).drop("match_tokens", "tokens"),
             # blocking's C4 unigram channel is tokens' LAST consumer —
             # from here on every stage reads match-relevant columns

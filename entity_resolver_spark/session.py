@@ -3,6 +3,19 @@
 Local mode is for tests/bench only; the same settings (AQE, skew-join
 splitting, Arrow) are what you'd ship to a real multi-executor cluster
 via spark-submit --py-files.
+
+The session also sizes Spark's generated-code class cache to the
+pipeline's working set (`CODEGEN_CACHE_ENTRIES`) and keeps whole-stage
+codegen ids out of class names. Every operator plan is Java source that
+Janino compiles into a class; the cache keys classes by their source,
+so a plan that runs again reuses its class instead of compiling it
+again (~7-10 ms each). At Spark's default of 100 entries one resolve
+(~500 classes) evicted every class before it came round again, and
+each operation paid all of its compiles anew: ~665 per resolve of the
+benchmark corpus, ~175 per near-dup pass. AQE numbers the codegen
+stages of a query in the order its query stages finish, so with the id
+in the class name the same code got a new name, and a new compile,
+whenever that order changed.
 """
 
 from __future__ import annotations
@@ -28,6 +41,19 @@ os.environ.setdefault("NUMPY_MADVISE_HUGEPAGE", "0")
 os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(512 * 1024 * 1024))
 os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(512 * 1024 * 1024))
 os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+
+# spark.sql.codegen.cache.maxEntries: classes one session compiles,
+# counted with an unbounded cache on a 4-core host (3 task threads; in
+# local mode a whole-stage class is compiled and cached twice, for the
+# driver's check and for the tasks' class loader). A resolve of the
+# 3000-turn resolve_mixed corpus plus a second one on new inputs: ~560;
+# near-dup set-up and passes: ~160; one tools/check_oracles.py sweep:
+# ~760; 1479 together. 2000 leaves a third of headroom. A static SQL
+# conf: CodeGenerator reads it once, when it first loads, so it must be
+# set when the session is built (`extra_conf` still overrides it). A
+# cached class costs metaspace it costs anyway — an evicted class is
+# not unloaded, so at the default the recompiled copies pile up.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -70,6 +96,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():
