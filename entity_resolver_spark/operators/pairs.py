@@ -6,9 +6,11 @@ similarity.py and the weighted combination in validator.py:396-401 (K8).
 Execution shape: the candidate-pair table is joined twice against a
 pruned attribute view (reference J3 pattern, address_processor.py:
 686-707) — Catalyst prunes columns so only what the kernels need moves
-through the shuffle. A cheap JVM-only token-overlap prefilter runs
-BEFORE any Python UDF so the Arrow batches only carry plausible pairs
-(reference analog: centroid prefilter O5, utils/clustering.py:331-403).
+through the shuffle. One Arrow round trip (`sparse_cosine_blob_udf`)
+computes both the token-overlap cosine and the TF-IDF cosine; the
+overlap cosine then gates the string kernels, so only plausible pairs
+reach Jaro-Winkler and Levenshtein (reference analog: centroid
+prefilter O5, utils/clustering.py:331-403).
 """
 
 from __future__ import annotations
@@ -47,9 +49,10 @@ def score_pairs(
     stats for Catalyst to decide with) removes even that shuffle: the
     pair table never moves at all.
 
-    The JVM prefilter (binary overlap cosine on vec_idx, which rides
-    along for the TF-IDF cosine anyway) still gates the Python kernels:
-    only surviving rows reach Arrow.
+    The prefilter (binary overlap cosine, computed from the packed
+    vectors by `sparse_cosine_blob_udf` in the same Arrow round trip as
+    the TF-IDF cosine) gates the string kernels: only pairs at or above
+    PREFILTER_FLOOR reach Jaro-Winkler and Levenshtein.
 
     String kernels run on a HEAD and a TAIL window and take the MIN:
     transcript corpora routinely share templated openings, and a

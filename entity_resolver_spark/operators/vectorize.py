@@ -100,6 +100,12 @@ def hashed_tfidf(
             .drop("__rk")
         )
     sv = F.array_sort(F.collect_list(F.struct("slot", "w")))
+    # `norm` is referenced twice (condition and lambda), as in
+    # add_fused_vector: with one reference CollapseProject inlines its
+    # aggregate into the lambda, and every row re-folds its norm once
+    # per slot (up to top_k times). A zero norm passes the weights
+    # through, as l2_normalize_expr does.
+    norm = F.col("norm")
     vec = (
         weighted.groupBy(id_col)
         .agg(sv.alias("sv"))
@@ -114,7 +120,9 @@ def hashed_tfidf(
         .select(
             id_col,
             F.transform(F.col("sv"), lambda e: e["slot"]).alias("vec_idx"),
-            F.transform(F.col("sv"), lambda e: e["w"] / F.col("norm")).alias("vec_val"),
+            F.when(norm > 0, F.transform(F.col("sv"), lambda e: e["w"] / norm))
+            .otherwise(F.transform(F.col("sv"), lambda e: e["w"]))
+            .alias("vec_val"),
         )
     )
     # packed twin of (vec_idx, vec_val): pair scoring ships this single

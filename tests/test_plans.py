@@ -11,7 +11,9 @@ as a bench regression:
     contract);
   * `_read` must spread a single-split scan across the session's cores
     (the test tables are single-row-group parquet files; without the
-    spread, all pre-shuffle work runs on one core).
+    spread, all pre-shuffle work runs on one core);
+  * hashed TF-IDF must compute each row's L2 norm once, not once per
+    vector slot.
 
 Plans are inspected unexecuted (explain only), so the whole module is
 cheap at sf0.001.
@@ -137,6 +139,35 @@ def test_read_spread_cache_keyed_on_schema(spark, entry, tmp_path):
     df = entry._read(spark, str(tmp_path), "reused")
     assert entry._SPREAD_COL[(p, ("flag", "uniq"))] == "uniq"
     assert df.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
+
+
+def _optimized_alias(df, name: str) -> str:
+    """The expression an Alias `name` computes in `df`'s optimized plan."""
+    stack = [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        exprs = node.expressions()
+        for i in range(exprs.size()):
+            e = exprs.apply(i)
+            if e.nodeName() == "Alias" and e.name() == name:
+                return e.toString()
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    raise AssertionError(f"no alias {name} in the optimized plan")
+
+
+def test_tfidf_norm_folds_once_per_row(spark):
+    """vec_val divides by a norm computed once per row: if the optimizer
+    inlines the norm's aggregate into the per-slot lambda, every row
+    re-folds it once per slot (up to top_k times)."""
+    from entity_resolver_spark.operators.vectorize import hashed_tfidf, idf_table
+
+    records = spark.createDataFrame(
+        [(1, ["a", "b", "c"]), (2, ["b", "c", "d"])], "conv_id long, tokens array<string>"
+    )
+    vec = hashed_tfidf(records, idf_table(records, n_records=2))
+    assert "aggregate" not in _optimized_alias(vec, "vec_val")
+    assert "aggregate" in _optimized_alias(vec, "norm")
 
 
 def test_bench_effective_cores_env_cap():
