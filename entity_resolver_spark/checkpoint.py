@@ -28,10 +28,16 @@ import hashlib
 import json
 import os
 import time
+import weakref
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from entity_resolver_spark.lineage import counted_cut, release_checkpoint
+
+
+# CodegenMetrics' compile histogram per SparkContext: walking
+# jvm.org.apache.spark... to it costs ~9 py4j round trips, a read of it 1
+_compile_histograms: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def codegen_compiles(spark: SparkSession) -> int | None:
@@ -40,9 +46,12 @@ def codegen_compiles(spark: SparkSession) -> int | None:
     jvm = getattr(spark, "_jvm", None)
     if jvm is None:
         return None  # Spark Connect: no JVM handles on the driver
+    sc = spark.sparkContext
     try:
-        cm = jvm.org.apache.spark.metrics.source.CodegenMetrics
-        return int(cm.METRIC_COMPILATION_TIME().getCount())
+        if sc not in _compile_histograms:
+            cm = jvm.org.apache.spark.metrics.source.CodegenMetrics
+            _compile_histograms[sc] = cm.METRIC_COMPILATION_TIME()
+        return int(_compile_histograms[sc].getCount())
     except Exception:  # any JVM-side signature drift
         return None
 

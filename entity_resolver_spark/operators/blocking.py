@@ -43,19 +43,30 @@ from entity_resolver_spark.config import BlockingConfig
 from entity_resolver_spark.lineage import eager_cut
 
 
-def band_keys(sig_col, n_hashes: int, n_bands: int) -> "F.Column":
-    """Array of band keys 'b<i>:<h1>_<h2>_...' from a MinHash signature."""
+def minhash_signature(rows: DataFrame, key: str, n_hashes: int, hash_sql) -> DataFrame:
+    """rows(key, ...) -> (key, sig): sig[i] is the MIN over a key's rows
+    of the SQL expression `hash_sql(i)`, hash function i of the family.
+
+    One codegen'd MIN aggregate per hash function (the former array
+    form, n_hashes x array_min(transform), evaluates interpreted, one
+    pass per hash). The aggregates are one SQL string, not n_hashes
+    chains of Column calls: each Column call is at least one py4j round
+    trip from the driver (tests/test_plans.py bounds the count)."""
+    mins = ", ".join(f"min({hash_sql(i)})" for i in range(n_hashes))
+    return rows.groupBy(key).agg(F.expr(f"array({mins}) AS sig"))
+
+
+def band_keys(sig: str, n_hashes: int, n_bands: int, prefix: str = "") -> "F.Column":
+    """Array of band keys '<prefix>b<i>_<h1>_<h2>_...' from the MinHash
+    signature column named `sig`, as one SQL expression."""
     rows = n_hashes // n_bands
-    return F.array(
-        *[
-            F.concat_ws(
-                "_",
-                F.lit(f"b{b}"),
-                *[sig_col[b * rows + r].cast("string") for r in range(rows)],
-            )
-            for b in range(n_bands)
-        ]
+    bands = ", ".join(
+        f"concat_ws('_', '{prefix}b{b}', "
+        + ", ".join(f"CAST({sig}[{b * rows + r}] AS STRING)" for r in range(rows))
+        + ")"
+        for b in range(n_bands)
     )
+    return F.expr(f"array({bands})")
 
 
 def blocking_keys(
@@ -116,29 +127,16 @@ def blocking_keys(
     )
 
     # C2 lsh: sig[i] = min over tokens of xxhash64(i, token), banded
-    # with the same key layout as band_keys, via MIN aggregates.
-    n_h, n_b = cfg.minhash_hashes, cfg.lsh_bands
-    rows_per_band = n_h // n_b
-    mins = ex.groupBy("conv_id").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("token"))).alias(f"__m{i}")
-            for i in range(n_h)
-        ]
+    # b x r into 'lsh:b<i>_...' keys
+    sig = minhash_signature(
+        ex, "conv_id", cfg.minhash_hashes, lambda i: f"xxhash64({i}, token)"
     )
-    band_cols = [
-        F.concat_ws(
-            "_",
-            F.lit(f"b{b}"),
-            *[
-                F.col(f"__m{b * rows_per_band + r}").cast("string")
-                for r in range(rows_per_band)
-            ],
-        )
-        for b in range(n_b)
-    ]
-    c2 = mins.select(
-        "conv_id", F.explode(F.array(*band_cols)).alias("block_key")
-    ).withColumn("block_key", F.concat(F.lit("lsh:"), F.col("block_key")))
+    c2 = sig.select(
+        "conv_id",
+        F.explode(
+            band_keys("sig", cfg.minhash_hashes, cfg.lsh_bands, prefix="lsh:")
+        ).alias("block_key"),
+    )
 
     # C3: per-record rarest tokens by global document frequency
     c3 = _rare_token_keys(recs, "rt:", cfg, df_table=df_table, exploded=ex)

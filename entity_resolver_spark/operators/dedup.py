@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
 
-from entity_resolver_spark.operators.blocking import band_keys
+from entity_resolver_spark.operators.blocking import band_keys, minhash_signature
 
 POLY_MOD = 1_000_000_007  # matches textstats.poly_hash_expr default
 
@@ -162,28 +162,19 @@ def minhash_lsh_pairs(
         from entity_resolver_spark.operators.textstats import poly_hash_expr
 
         hashed = rows.select("id", poly_hash_expr(F.col("s")).alias("h"))
-        aggs = [
-            F.min(
-                F.pmod(F.col("h") * (2 * i + 3) + (5 * i + 7), F.lit(POLY_MOD))
-            ).alias(f"m{i}")
-            for i in range(n_hashes)
-        ]
+
+        def hash_sql(i: int) -> str:
+            return f"pmod(h * {2 * i + 3} + {5 * i + 7}, {POLY_MOD})"
+
     else:
-        hashed = rows.select("id", F.col("s").alias("h"))
-        aggs = [
-            F.min(F.xxhash64(F.lit(i), F.col("h"))).alias(f"m{i}")
-            for i in range(n_hashes)
-        ]
-    # r6 (guide §4.1): signature via codegen'd MIN aggregates over the
-    # exploded rows — the former array-expression form (n_hashes x
-    # array_min(transform)) ran interpreted, one pass per hash function.
-    sig = (
-        hashed.groupBy("id")
-        .agg(*aggs)
-        .select("id", F.array(*[F.col(f"m{i}") for i in range(n_hashes)]).alias("sig"))
-    )
+        hashed = rows
+
+        def hash_sql(i: int) -> str:
+            return f"xxhash64({i}, s)"
+
+    sig = minhash_signature(hashed, "id", n_hashes, hash_sql)
     banded = sig.select(
-        "id", F.explode(band_keys(F.col("sig"), n_hashes, n_bands)).alias("bk")
+        "id", F.explode(band_keys("sig", n_hashes, n_bands)).alias("bk")
     )
     a = banded.select(F.col("bk"), F.col("id").alias("id_a"))
     b = banded.select(F.col("bk"), F.col("id").alias("id_b"))
@@ -251,17 +242,19 @@ def ngram_jaccard_pairs(
     # r6: size-ratio prefilter (exact, output-preserving). The computed
     # jaccard is I/(n_a+n_b-I) with I <= min(n_a, n_b) (I counts a
     # subset of the true intersection), and x/(n_a+n_b-x) is increasing
-    # in x, so jaccard <= min/max. A pair with t*max > min can never
+    # in x, so jaccard <= min/max. A pair with min/max < t can never
     # reach the floor, and dropping its co-occurrence rows BEFORE the
     # pair aggregate cuts the 127M-row hash-aggregate input (~45% of
     # joined rows survive at t=0.5 on the U[10,100]-words corpus).
-    t = float(jaccard_floor)
+    # min/max is the final filter's own division at I = min, and a
+    # correctly rounded division is monotone, so the test is exact in
+    # floating point too; `t*max <= min` was not: 25 * 0.56 rounds up
+    # to 14.000000000000002 and dropped a 14-in-25 pair of jaccard 0.56.
     inter = (
         a.hint("merge").join(b, "s")
         .where(
             (F.col("id_a") < F.col("id_b"))
-            & (F.col("n_a") * t <= F.col("n_b"))
-            & (F.col("n_b") * t <= F.col("n_a"))
+            & (F.least("n_a", "n_b") / F.greatest("n_a", "n_b") >= jaccard_floor)
         )
         .groupBy("id_a", "id_b")
         .agg(
@@ -353,29 +346,21 @@ def simhash_pairs(
     # token once in a projection, and collect the 64 bit votes as
     # codegen'd SUM aggregates; explode_outer + coalesce(sum, 0)
     # reproduces the empty-doc vote (0 votes over n=0 tokens sets every
-    # bit) exactly.
+    # bit) exactly. The 64 votes and the bit fold are one SQL string:
+    # as Column calls they took ~4k py4j round trips to build.
+    vote_bits = " | ".join(
+        f"shiftleft(CAST(coalesce(sum(CAST(shiftright(h, {b}) & 1 AS INT)), 0) * 2"
+        f" >= count(h) AS BIGINT), {b})"
+        for b in range(64)
+    )
     tokd = docs.select(F.col(id_col).alias("id"), F.explode_outer(toks).alias("t"))
     hashed = tokd.select(
         "id", F.when(F.col("t").isNotNull(), tok_hash(F.col("t"))).alias("h")
     )
-    votes = hashed.groupBy("id").agg(
-        F.count("h").alias("n"),
-        *[
-            F.coalesce(
-                F.sum(F.shiftright(F.col("h"), b).bitwiseAND(F.lit(1)).cast("int")),
-                F.lit(0),
-            ).alias(f"v{b}")
-            for b in range(64)
-        ],
-    )
-    sim = F.lit(0).cast("long")
-    for b in range(64):
-        sim = sim.bitwiseOR(
-            F.shiftleft((F.col(f"v{b}") * 2 >= F.col("n")).cast("long"), b)
-        )
+    votes = hashed.groupBy("id").agg(F.expr(f"{vote_bits} AS sim"))
     # materialized once: both sides of the chunk self-join read this
     # 1-row-per-doc table instead of re-running tokenize+hash+votes
-    sh = votes.select("id", sim.alias("sim")).localCheckpoint()
+    sh = votes.localCheckpoint()
     if max_hamming + 1 > 64:
         raise ValueError(f"max_hamming={max_hamming} needs >64 chunks of a 64-bit hash")
     # r6 (guide §2.5): COMBINATORIAL pigeonhole banding. The classic
@@ -411,18 +396,16 @@ def simhash_pairs(
     bounds = [round(64 * c / m) for c in range(m + 1)]
     maxw = max(bounds[c + 1] - bounds[c] for c in range(m))
     chunk = [
-        F.shiftright(F.col("sim"), bounds[c]).bitwiseAND(
-            F.lit((1 << (bounds[c + 1] - bounds[c])) - 1)
-        )
+        f"(shiftright(sim, {bounds[c]}) & {(1 << (bounds[c + 1] - bounds[c])) - 1})"
         for c in range(m)
     ]
     keys = []
     for ci, combo in enumerate(_it.combinations(range(m), r)):
-        k = F.lit(ci).cast("long")
+        k = f"CAST({ci} AS BIGINT)"
         for c in combo:
-            k = F.shiftleft(k, maxw).bitwiseOR(chunk[c])
+            k = f"(shiftleft({k}, {maxw}) | {chunk[c]})"
         keys.append(k)
-    banded = sh.select("id", "sim", F.explode(F.array(*keys)).alias("bk"))
+    banded = sh.selectExpr("id", "sim", f"explode(array({', '.join(keys)})) AS bk")
     a = banded.select("bk", F.col("id").alias("id_a"), F.col("sim").alias("sim_a"))
     b = banded.select("bk", F.col("id").alias("id_b"), F.col("sim").alias("sim_b"))
     return (
@@ -555,7 +538,8 @@ def _cosine_verify_kernel(
     """mapInArrow exact-cosine verification of (id_a, id_b) candidates
     against a collected (id, vector) table. Returns None when the
     vector table is not well-formed for the vectorized path (ragged or
-    null vectors, non-integral ids) — the caller falls back to the
+    null vectors, non-integral ids, non-finite values, norms whose
+    square overflows) — the caller falls back to the
     JVM expression join. Value contract: bit-identical doubles to
     dense_cosine_expr (see caller comment)."""
     import pyarrow as pa_
@@ -600,9 +584,15 @@ def _cosine_verify_kernel(
     # per-vector norms, ascending-index fold order (identical bits to
     # the per-pair fold: the summed sequence is the same)
     sq = np.zeros(len(M))
-    for i in range(d):
-        sq += M[:, i] * M[:, i]
-    nrm = np.sqrt(sq)
+    with np.errstate(over="ignore"):
+        for i in range(d):
+            sq += M[:, i] * M[:, i]
+        nrm = np.sqrt(sq)
+        # finite entries of ~1e155 overflow a norm (or a dot, bounded by
+        # the product of two norms) to inf, and inf/inf is NaN: the JVM
+        # path keeps such a pair (NaN >= floor), NumPy would drop it
+        if not np.isfinite(nrm.max() ** 2):
+            return None
     bc = cand.sparkSession.sparkContext.broadcast((ids, M, nrm))
 
     def fn(batches):

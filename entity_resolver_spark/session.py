@@ -16,6 +16,21 @@ benchmark corpus, ~175 per near-dup pass. AQE numbers the codegen
 stages of a query in the order its query stages finish, so with the id
 in the class name the same code got a new name, and a new compile,
 whenever that order changed.
+
+It also turns off PySpark's DataFrame call-site capture
+(`spark.python.sql.dataFrameDebugging.enabled`, on by default). With it
+on, every `pyspark.sql.functions` call and `Column` method goes through
+`pyspark.errors.utils._with_origin`, which costs about 11 extra py4j
+round trips per call (the active session, a reflection lookup of
+`PySparkCurrentOrigin`, a conf read, set and clear) plus a Python stack
+walk. A near-dup pass of the benchmark made 21.8k round trips to build
+its plans with it on and 9.2k with it off. What is lost: Spark's
+DataFrame error context no longer names the Python call site that built
+the failing expression. To get it back, pass
+`extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}`
+before the process's first DataFrame call: PySpark reads the setting
+once per process (`pyspark.errors.utils.is_debugging_enabled`) and keeps
+it.
 """
 
 from __future__ import annotations
@@ -98,6 +113,8 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.sql.codegen.useIdInClassName", "false")
+        # call-site capture off: see the module docstring
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -65,35 +65,37 @@ def test_embedding_verify_kernel_matches_expression_path(spark):
 
     rng = np.random.default_rng(7)
     centers = rng.standard_normal((3, 16))
-    rows = []
+    clustered = []
     for i in range(120):
         v = centers[i % 3] + rng.standard_normal(16) * 0.05
-        rows.append((i, [float(x) for x in v]))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        clustered.append((i, [float(x) for x in v]))
+    # finite entries whose squares overflow: the JVM cosine is
+    # inf/inf = NaN, which Spark's `NaN >= floor` keeps
+    huge = [(0, [1e155] * 4), (1, [1e155, 1e155, 1e155, 0.9e155])]
 
-    new = D.embedding_dup_pairs(emb, cosine_floor=0.9)
-    orig = D._cosine_verify_kernel
-    try:
-        D._cosine_verify_kernel = lambda *a, **k: None  # force JVM path
-        old = D.embedding_dup_pairs(emb, cosine_floor=0.9)
-        assert new.schema == old.schema
-        assert new.exceptAll(old).count() == 0
-        assert old.exceptAll(new).count() == 0
-        assert new.count() > 100  # the fixture actually exercises pairs
-    finally:
-        D._cosine_verify_kernel = orig
+    for rows, min_pairs in ((clustered, 100), (huge, 1)):
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        new = D.embedding_dup_pairs(emb, cosine_floor=0.9)
+        orig = D._cosine_verify_kernel
+        try:
+            D._cosine_verify_kernel = lambda *a, **k: None  # force JVM path
+            old = D.embedding_dup_pairs(emb, cosine_floor=0.9)
+            assert new.schema == old.schema
+            assert new.exceptAll(old).count() == 0
+            assert old.exceptAll(new).count() == 0
+            assert new.count() >= min_pairs  # the fixture actually exercises pairs
+        finally:
+            D._cosine_verify_kernel = orig
 
     # non-finite vectors must fall back (Spark's NaN >= floor is true,
     # NumPy's is false — the kernel refuses rather than diverge)
-    bad = spark.createDataFrame(
-        [(0, [float("nan")] * 4), (1, [1.0, 0.0, 0.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    assert D._cosine_verify_kernel(
-        bad.select(F.lit(0).alias("id_a"), F.lit(1).alias("id_b")),
-        bad.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")),
-        0.9,
-    ) is None
+    for rows in ([(0, [float("nan")] * 4), (1, [1.0, 0.0, 0.0, 0.0])], huge):
+        bad = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        assert D._cosine_verify_kernel(
+            bad.select(F.lit(0).alias("id_a"), F.lit(1).alias("id_b")),
+            bad.select(F.col("vec_id").alias("id"), F.col("embedding").alias("v")),
+            0.9,
+        ) is None
 
 
 def test_cosine_verify_gate_uses_max_dimension(spark, monkeypatch):
@@ -118,34 +120,38 @@ def test_cosine_verify_gate_uses_max_dimension(spark, monkeypatch):
 
 
 def test_ngram_size_prefilter_keeps_boundary_pairs(spark):
-    """The r6 size-ratio prefilter (J >= t implies t*max <= min over
+    """The r6 size-ratio prefilter (J >= t implies min/max >= t over
     DISTINCT shingle counts) must keep pairs sitting exactly ON the
     ratio boundary and only drop pairs that provably cannot reach the
-    floor. Brute-force jaccard over distinct word-3-grams is the truth."""
-    # doc A: 6 words -> 4 shingles; doc B: A's words + 4 more -> 8
-    # shingles containing all of A's (n_a/n_b = 0.5, exactly the t=0.5
-    # boundary; J = 4/8 = 0.5 >= t must SURVIVE the prefilter)
-    a = "alpha beta gamma delta epsilon zeta"
-    b = a + " eta theta iota kappa"
-    # doc C: shares A's first 4 words (2 shingles of A's 4) but is 3x
-    # A's size -> ratio < t, provably below floor, must be dropped
-    c = "alpha beta gamma delta " + " ".join(f"w{i}" for i in range(14))
-    docs = spark.createDataFrame(
-        [(1, a), (2, b), (3, c)], "doc_id long, text string"
-    )
-    got = {
-        (r["id_a"], r["id_b"]): r["jaccard"]
-        for r in ngram_jaccard_pairs(docs, jaccard_floor=0.5).collect()
-    }
+    floor. Brute-force jaccard over distinct word-3-grams is the truth.
+    At the non-dyadic floors t*max rounds up past min (25 * 0.56 =
+    14.000000000000002), so only the division form is exact there."""
 
-    def sh(t):
-        w = t.split()
+    def sh(text):
+        w = text.split()
         return {" ".join(w[i : i + 3]) for i in range(len(w) - 2)}
 
-    sa, sb = sh(a), sh(b)
-    want = len(sa & sb) / len(sa | sb)
-    assert want == 0.5  # boundary by construction
-    assert got == {(1, 2): pytest.approx(want, abs=1e-12)}
+    for t, n_a, n_b in ((0.5, 4, 8), (0.56, 14, 25), (0.28, 7, 25)):
+        # doc A: n_a shingles; doc B: A's words + more -> n_b shingles
+        # containing all of A's (J = n_a/n_b = t, exactly the boundary;
+        # J >= t must SURVIVE the prefilter)
+        a = " ".join(f"a{i}" for i in range(n_a + 2))
+        b = a + "".join(f" b{i}" for i in range(n_b - n_a))
+        # doc C: shares A's first 4 words (2 shingles of A's) and has 16
+        # shingles of its own -> below the floor, must be dropped
+        c = " ".join(a.split()[:4] + [f"w{i}" for i in range(14)])
+        docs = spark.createDataFrame(
+            [(1, a), (2, b), (3, c)], "doc_id long, text string"
+        )
+        got = {
+            (r["id_a"], r["id_b"]): r["jaccard"]
+            for r in ngram_jaccard_pairs(docs, jaccard_floor=t).collect()
+        }
+        sa, sb = sh(a), sh(b)
+        assert (len(sa), len(sb)) == (n_a, n_b)
+        want = len(sa & sb) / len(sa | sb)
+        assert want == t  # boundary by construction
+        assert got == {(1, 2): pytest.approx(want, abs=1e-12)}, t
 
 
 def test_simhash_near_dup(docs):

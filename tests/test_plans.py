@@ -13,10 +13,12 @@ as a bench regression:
     (the test tables are single-row-group parquet files; without the
     spread, all pre-shuffle work runs on one core);
   * hashed TF-IDF must compute each row's L2 norm once, not once per
-    vector slot.
+    vector slot;
+  * the wide MinHash/SimHash builders must build their plans in a few
+    hundred py4j round trips (each Column call is at least one).
 
-Plans are inspected unexecuted (explain only), so the whole module is
-cheap at sf0.001.
+Plans are inspected unexecuted (explain only) or built on a few rows
+without collecting, so the whole module is cheap at sf0.001.
 """
 
 from __future__ import annotations
@@ -168,6 +170,67 @@ def test_tfidf_norm_folds_once_per_row(spark):
     vec = hashed_tfidf(records, idf_table(records, n_records=2))
     assert "aggregate" not in _optimized_alias(vec, "vec_val")
     assert "aggregate" in _optimized_alias(vec, "norm")
+
+
+def _count_round_trips(monkeypatch) -> list[int]:
+    """Counter of the py4j commands sent from now on. Memory commands
+    ('m') are not counted: they follow Python's garbage collection."""
+    from py4j.clientserver import ClientServerConnection
+
+    sent = [0]
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith("m\n"):
+            sent[0] += 1
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+    return sent
+
+
+# round trips to build each builder's plan on a three-row frame (its
+# localCheckpoint included); with call-site capture on and the builders
+# written as Column chains they took 2.2k-10.9k
+BUILD_ROUND_TRIPS = {"simhash": 400, "minhash": 800, "blocking_keys": 500}
+
+
+def test_wide_builders_build_in_few_round_trips(spark, monkeypatch):
+    from entity_resolver_spark.config import BlockingConfig
+    from entity_resolver_spark.operators import blocking, dedup
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f"), (3, "x y z")], "doc_id long, text string"
+    )
+    recs = spark.createDataFrame(
+        [(1, ["a", "b", "c"]), (2, ["a", "b", "d"])], "conv_id long, match_tokens array<string>"
+    )
+    cfg = BlockingConfig(unigrams_col=None, phonetic=False)
+    builders = {
+        "simhash": lambda: dedup.simhash_pairs(docs),
+        "minhash": lambda: dedup.minhash_lsh_pairs(docs),
+        "blocking_keys": lambda: blocking.blocking_keys(recs, cfg),
+    }
+    for build in builders.values():
+        build()  # first builds resolve JVM classes and functions once
+    sent = _count_round_trips(monkeypatch)
+    counts = {}
+    for name, build in builders.items():
+        n0 = sent[0]
+        build()
+        counts[name] = sent[0] - n0
+    assert all(counts[k] <= bound for k, bound in BUILD_ROUND_TRIPS.items()), counts
+
+
+def test_codegen_compiles_reads_in_one_round_trip(spark, monkeypatch):
+    """Every metrics row reads the compile count twice; the histogram
+    behind it is looked up once per SparkContext (~9 round trips)."""
+    from entity_resolver_spark.checkpoint import codegen_compiles
+
+    codegen_compiles(spark)
+    sent = _count_round_trips(monkeypatch)
+    assert codegen_compiles(spark) >= 0
+    assert sent[0] == 1
 
 
 def test_bench_effective_cores_env_cap():

@@ -1,4 +1,7 @@
-"""Python-worker import caches.
+"""Session settings and Python-worker import caches.
+
+`get_spark` turns off PySpark's DataFrame call-site capture, which
+costs ~11 py4j round trips per DataFrame/Column call.
 
 pyspark.worker calls importlib.invalidate_caches() at the start of every
 task. Importing the package in a worker keeps that call from re-reading
@@ -20,7 +23,7 @@ import pytest
 from pyspark import cloudpickle
 from pyspark.sql import functions as F
 
-pytestmark = pytest.mark.skipif(
+needs_spark_home = pytest.mark.skipif(
     not os.environ.get("SPARK_HOME"), reason="workers find Spark's archives via SPARK_HOME"
 )
 
@@ -47,6 +50,14 @@ def _archives_read_by(invalidate) -> list[str]:
     return sorted(set(seen))
 
 
+def test_call_site_capture_is_off(spark):
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert is_debugging_enabled() is False
+
+
+@needs_spark_home
 def test_worker_keeps_spark_archive_directories(spark):
     spark_root = os.path.join(os.path.realpath(os.environ["SPARK_HOME"]), "")
 
@@ -63,6 +74,7 @@ def test_worker_keeps_spark_archive_directories(spark):
     assert spark_archives == []
 
 
+@needs_spark_home
 def test_added_py_file_is_still_reread(spark, tmp_path):
     name = f"added_mod_{uuid.uuid4().hex[:8]}"
     archive = tmp_path / f"{name}.zip"
@@ -85,6 +97,7 @@ def test_added_py_file_is_still_reread(spark, tmp_path):
     assert (row.value, row.reread) == (42, True)
 
 
+@needs_spark_home
 def test_spark_files_under_spark_home_are_still_reread(tmp_path, monkeypatch):
     """A standalone executor keeps its SparkFiles directory under
     SPARK_HOME/work: archives there are the user's and keep stock
