@@ -73,7 +73,7 @@ def test_embedding_verify_kernel_matches_expression_path(spark):
     # inf/inf = NaN, which Spark's `NaN >= floor` keeps
     huge = [(0, [1e155] * 4), (1, [1e155, 1e155, 1e155, 0.9e155])]
 
-    for rows, min_pairs in ((clustered, 100), (huge, 1)):
+    for rows, min_pairs in ((clustered, 101), (huge, 1)):
         emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
         new = D.embedding_dup_pairs(emb, cosine_floor=0.9)
         orig = D._cosine_verify_kernel
